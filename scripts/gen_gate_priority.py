@@ -11,8 +11,13 @@ staleness fails CI.
 Rotation policy (same convention the r9/r10 verdicts ratified):
 
 1. every query whose last-certified round is the MINIMUM over the union
-   (the staleness boundary) heads the window, in the iteration order of
-   that round's CORRECTNESS file;
+   (the staleness boundary) heads the window, oldest raw certification
+   round first (tier-2 names reach the boundary one round older), then
+   in the iteration order of that round's CORRECTNESS file.  The order
+   is total, so a boundary cohort larger than the window splits the
+   same way on every run: its first ``WINDOW`` names fill the window
+   and the overflow takes the first slots after it — the head of the
+   next regenerated window, where it is the whole boundary;
 2. queries registered but never driver-certified follow (they must get
    their first certification before they can enter the rotation);
 3. the remaining queries follow ascending by last-certified round, so
@@ -122,7 +127,9 @@ def generate(
     boundary_round = min(eff(n) for n in known)
     boundary = [n for n in known if eff(n) == boundary_round]
     rest = [n for n in known if eff(n) != boundary_round]
-    boundary.sort(key=lambda n: certified[n][1])
+    # (raw round, file position) is unique per name: the split of an
+    # over-full boundary never depends on registry or dict order
+    boundary.sort(key=lambda n: certified[n])
     never.sort(key=lambda n: reg_pos[n])
     rest.sort(key=lambda n: (eff(n), certified[n][1]))
     return boundary + never + rest

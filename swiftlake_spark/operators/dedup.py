@@ -200,6 +200,8 @@ def incremental_dedup(
     bloom_prefilter: bool = True,
     broadcast_new: bool = True,
     index_bloom_bits: DataFrame | None = None,
+    bloom_k: int = 5,
+    bloom_bits_per_pos: int = 16,
     within_batch: bool = False,
     materialize_batch: bool = True,
 ) -> DataFrame:
@@ -214,10 +216,12 @@ def incremental_dedup(
     collided — the LSH OR-construction evidence strength.
 
     ``index_bloom_bits``: a persisted :func:`bloom_bits` relation over
-    the index's ``band:bh`` key strings (same k=5/bits=16 defaults as
-    the inline build) — the pre-filter then reads the few-KB bloom
-    instead of deriving it from the index, so a batch with no matches
-    never scans the index at all.
+    the index's ``band:bh`` key strings — the pre-filter then reads the
+    few-KB bloom instead of deriving it from the index, so a batch with
+    no matches never scans the index at all.  ``bloom_k`` /
+    ``bloom_bits_per_pos`` must be the ``k`` / ``bits_per_pos`` the
+    bits were built with (both default to :func:`bloom_bits`'s); a
+    mismatch probes the wrong positions and drops true duplicates.
 
     ``materialize_batch=True`` (default) computes the batch band keys
     exactly once (eager ``localCheckpoint``) instead of re-deriving the
@@ -300,14 +304,14 @@ def incremental_dedup(
         # single-broadcast variant folding the bits into a one-row
         # lookup map measured 2x SLOWER: Spark map lookups are linear
         # scans, so element_at over 2^16 entries costs ~32k comparisons
-        # per probe position.)  k/bits must match the build — the
-        # bloom_positions defaults on both sides.
+        # per probe position.)  k/bits must match the build.
         key = F.concat_ws(":", F.col("band").cast("string"),
                           F.col("bh").cast("string"))
         set_bits = F.broadcast(index_bloom_bits.select(
             F.col(index_bloom_bits.columns[0]).alias("__p")))
-        flt = new_bands.withColumn("__pos", bloom_positions(key))
-        for i in range(5):  # k — the bloom_positions default
+        flt = new_bands.withColumn(
+            "__pos", bloom_positions(key, bloom_k, bloom_bits_per_pos))
+        for i in range(bloom_k):
             flt = flt.join(
                 set_bits, F.get(F.col("__pos"), i) == F.col("__p"),
                 "left_semi",
@@ -743,7 +747,8 @@ def simhash_near_dups(
 
 
 def gram_positions(
-    df: DataFrame, id_col: str, text_col: str, *, n: int = 8, split: str = " "
+    df: DataFrame, id_col: str, text_col: str, *, n: int = 8, split: str = " ",
+    spread_input: bool | None = None,
 ) -> DataFrame:
     """(id, n_tokens, pos, gh): every 1-based word position's n-gram as a
     32-byte md5 key.  The raw material of :func:`duplicate_spans`, split
@@ -756,10 +761,12 @@ def gram_positions(
     POSITION is the same extreme per-row fold family as the MinHash
     signatures, and it measured 1.44 → 0.28 s on the sf0.1 corpus
     (min-of-4 A/B) when the single-split fixture scan is repartitioned.
-    On any multi-row-group production source spread() is a no-op."""
+    On any multi-row-group production source spread() is a no-op.
+    ``spread_input`` passes a caller's own ``needs_spread`` verdict on
+    the ``(id_col, text_col)`` projection through to ``spread``."""
     from swiftlake_spark.operators.parallelism import spread
 
-    df = spread(df.select(F.col(id_col), F.col(text_col)))
+    df = spread(df.select(F.col(id_col), F.col(text_col)), spread_input)
     w = F.split(F.col(text_col), split)
     arr = F.aggregate(
         F.array(w),

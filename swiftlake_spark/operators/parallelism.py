@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread(df: DataFrame) -> DataFrame:
+def spread(df: DataFrame, when: bool | None = None) -> DataFrame:
     """Scale-adaptive parallelism restore ahead of a heavy per-row stage
     (char/token explodes, regex chains, decode folds) — r14, guide §2.5
     "input skew: one huge unsplittable file".
@@ -35,8 +35,12 @@ def spread(df: DataFrame) -> DataFrame:
     the exchange, so the serialized scan stage is cheaper than an extra
     shuffle.  Those call sites were reverted; do not re-add without a
     measurement.
+
+    ``when`` is a :func:`needs_spread` verdict the caller already holds
+    (None: decide here), so a caller that acts on the same decision
+    elsewhere never re-evaluates it.
     """
-    if not needs_spread(df):
+    if not (needs_spread(df) if when is None else when):
         return df
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 

@@ -105,66 +105,58 @@ _GATE_TIER2 = frozenset({
 })
 
 _GATE_PRIORITY = [
-    # last certified r10
-    'q31_sessionization',
-    'q32_json_props',
-    # never driver-certified
-    'q155_incremental_dedup',
     # last certified r11
-    'q117_star_dedup',
-    'q119_sql_pruned_scan',
-    'q33_file_metadata',
-    'q34_select_except',
-    'q35_asof_join',
-    'q36_range_join',
-    'q37_struct_key_join',
-    'q76_pack_sequences',
-    'q98_excess_shippers',
-    'q99_waiting_orders',
-    'q100_sales_opportunity',
-    'q111_nested_evolution',
-    'q112_murmur3_bucket',
-    'q113_iceberg_read',
-    'q116_simhash_md5',
-    'q55_embedding_neardup',
-    'q46_cosine_topk',
-    'q47_embedding_stats',
-    'q38_scd_diff_classify',
-    'q39_map_funcs',
-    'q40_dedup_exact',
-    'q41_dedup_keeper',
-    'q42_text_stats',
-    'q43_ngram_jaccard',
-    'q44_fingerprint',
-    'q45_langid_score',
-    'q60_lateral_join',
-    'q61_scalar_subquery',
-    'q62_grouping_sets',
-    'q106_decimal_exact',
-    'q107_approx_percentile',
-    'q48_minhash_lsh',
-    'q51_text_quality',
-    'q54_bpe_tokens',
-    # last certified r10
-    'q143_gif_frames',
-    # last certified r11
-    'q56_hash_split',
-    # last certified r10
-    'q144_mixed_images',
-    # last certified r11
-    'q146_url_dedup',
-    'q147_char_diversity',
-    'q148_zipf_slope',
-    'q149_token_budget',
+    'q49_simhash_neardup',
+    'q50_ann_lsh_topk',
+    'q58_ivf_topk',
+    'q53_multimodal_features',
+    'q108_audio_features',
+    'q114_video_frames',
+    'q115_semantic_dedup',
+    'q150_image_phash_dedup',
     # last certified r12
-    'q129_sql_ddl_lifecycle',
-    # last certified r11
-    'q118_png_features',
-    # last certified r12
-    'q130_embed_quantize',
-    'q131_doc_repetition',
-    'q132_funnel',
-    'q133_retention',
+    'q134_hopping_window',
+    'q135_anomaly_zscore',
+    'q136_event_transitions',
+    'q123_span_dedup',
+    'q124_bm25',
+    'q125_dsir_weights',
+    'q126_editdist_neardup',
+    'q127_tfidf_topterms',
+    'q128_stratified_sample',
+    'q120_jpeg_features',
+    'q57_quantiles',
+    'q59_vocab_topk',
+    'q63_exists_subquery',
+    'q64_explode_tokens',
+    'q65_string_agg',
+    'q66_unpivot',
+    'q67_regexp',
+    'q68_sequence',
+    'q69_bitwise',
+    'q70_date_arith',
+    'q71_array_funcs',
+    'q72_local_volume',
+    'q73_window_extras',
+    'q74_conditional_agg',
+    'q75_gopher_rules',
+    'q77_contamination',
+    'q78_returned_revenue',
+    'q79_median_stats',
+    'q80_set_ops_all',
+    'q81_grouping_id',
+    'q82_nation_volume',
+    'q83_important_stock',
+    'q84_uuid_type',
+    'q85_time_type',
+    'q86_min_cost_supplier',
+    'q87_order_priority',
+    'q88_forecast_revenue',
+    'q89_market_share',
+    'q90_nation_profit',
+    'q91_customer_distribution',
+    'q92_promo_revenue',
+    'q93_top_supplier',
 ]
 
 

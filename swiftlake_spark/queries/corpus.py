@@ -91,17 +91,21 @@ def q123_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         from swiftlake_spark.operators.parallelism import needs_spread
 
         level = storage_level_from_env("SWIFTLAKE_GRAMS_STORAGE")
-        g = gram_positions(d, "doc_id", "text", n=8)
         # r15 (guide §2.5): gram_positions spread-widens the md5 fold on
         # a narrow local scan (build 2.4 → 1.3 s cold).  The PERSISTED
         # copy, though, is traversed every warm pass by two consumers,
-        # and caching it at defaultParallelism partitions costs ~0.2 s
-        # of extra per-task floor per pass — so when (and only when) the
-        # source scan was narrow enough for spread to have fired, the
-        # cache is re-keyed through an AQE-coalesced exchange on the
-        # dup-detection key.  At production scan widths both the spread
-        # and this exchange are no-ops (needs_spread is False).
-        if needs_spread(d.select("doc_id", "text")):
+        # so when (and only when) that spread fired, the cache is
+        # re-keyed by a hash exchange on the dup-detection key ``gh``:
+        # the cached copy is then co-partitioned with the dup-detection
+        # aggregate, which reads it without another shuffle.  (AQE does
+        # not coalesce it — a cached plan keeps its output partitioning
+        # — so it holds spark.sql.shuffle.partitions partitions.)  One
+        # needs_spread verdict drives both the spread and the re-key; at
+        # production scan widths it is False and both are no-ops.
+        spread_fired = needs_spread(d.select("doc_id", "text"))
+        g = gram_positions(d, "doc_id", "text", n=8,
+                           spread_input=spread_fired)
+        if spread_fired:
             g = g.repartition(F.col("gh"))
         grams = registry.put_persisted("q123_grams", key, g.persist(level),
                                        app_id=app)

@@ -148,8 +148,7 @@ class Catalog:
         )
         # v1 is the create (version counter starts at 0 → claim v1)
         write_new_version(meta)
-        return Table(self.spark, meta, guard=self.guard,
-                     metric_collectors=self.metric_collectors)
+        return self._table(meta)
 
     def drop_table(self, name: str) -> None:
         loc = self._location(name)
@@ -189,14 +188,24 @@ class Catalog:
     # ------------------------------------------------------------- read
     def table(self, name: str) -> Table:
         base, _, _ = self._parse_name(name)
-        return Table(self.spark, load_metadata(self._location(base)), guard=self.guard,
+        return self._table(load_metadata(self._location(base)))
+
+    def _table(self, meta: TableMetadata) -> Table:
+        return Table(self.spark, meta, guard=self.guard,
                      metric_collectors=self.metric_collectors)
 
     def load(self, name: str, filter=None, *, filter_rows: bool = True) -> DataFrame:
         """Load a table as a DataFrame, honoring time-travel suffixes."""
-        base, kind, arg = self._parse_name(name)
-        t = Table(self.spark, load_metadata(self._location(base)), guard=self.guard,
-                  metric_collectors=self.metric_collectors)
+        base, _, _ = self._parse_name(name)
+        return self._scan(load_metadata(self._location(base)), name, filter,
+                          filter_rows=filter_rows)
+
+    def _scan(self, meta: TableMetadata, name: str, filter=None, *,
+              filter_rows: bool = True) -> DataFrame:
+        """:meth:`load` on an already-loaded ``meta`` of ``name``'s base
+        table, so one caller can plan several scans on one snapshot."""
+        _, kind, arg = self._parse_name(name)
+        t = self._table(meta)
         kwargs: dict[str, Any] = {"filter_rows": filter_rows}
         if kind == "timestamp":
             kwargs["as_of_ms"] = _timestamp_arg_ms(arg)
@@ -275,7 +284,11 @@ class Catalog:
         file list (never re-applied to rows — filter_rows=False), so a
         skipped or unparseable conjunct costs pruning, not correctness.
         Spark's ``TIMESTAMP/VERSION AS OF`` spelling is normalized to
-        the ``$suffix`` sugar first (:meth:`_rewrite_as_of`)."""
+        the ``$suffix`` sugar first (:meth:`_rewrite_as_of`).
+
+        Each base table's metadata is loaded once per call and feeds its
+        schema, record count and every scan of it, so the whole query
+        plans against one snapshot even while other handles commit."""
         import hashlib as _hl
 
         from swiftlake_spark.dml.sqlfilter import parse_filter
@@ -303,13 +316,20 @@ class Catalog:
         if not occs:
             return sql
 
+        metas: dict[str, TableMetadata] = {}
+
+        def _meta_of(base: str) -> TableMetadata:
+            if base not in metas:
+                metas[base] = load_metadata(self._location(base))
+            return metas[base]
+
         struct_cache: dict[str, T.StructType | None] = {}
 
         def _struct_of(base: str) -> T.StructType | None:
             if base not in struct_cache:
                 try:
-                    meta = load_metadata(self._location(base))
-                    struct_cache[base] = T.StructType.fromJson(meta.schema_json)
+                    struct_cache[base] = T.StructType.fromJson(
+                        _meta_of(base).schema_json)
                 except Exception:
                     struct_cache[base] = None
             return struct_cache[base]
@@ -379,7 +399,8 @@ class Catalog:
                 + "_" + _hl.md5(digest.encode()).hexdigest()[:6]
             )
             expr = E.and_(*exprs) if exprs else None
-            self.load(ref, expr, filter_rows=False).createOrReplaceTempView(view)
+            self._scan(_meta_of(ref.split("$")[0]), ref, expr,
+                       filter_rows=False).createOrReplaceTempView(view)
             registered[key] = view
             return view
 
@@ -418,7 +439,11 @@ class Catalog:
         # relations, the raw view; collection is bounded by
         # join_filter_max_keys and abandoned beyond it.  Like the base
         # extraction this only shrinks file lists; rows still come from
-        # the original SQL.
+        # the original SQL.  An IN set only prunes files when the key's
+        # values are confined per file — a partition source column
+        # (partition values) or the leading sort column (narrow min/max)
+        # — so any other edge is skipped from the metadata alone,
+        # before a Spark job is spent on its keys.
         if self.join_filter_pushdown and solo:
             from pyspark.sql import functions as _F
 
@@ -426,10 +451,16 @@ class Catalog:
             cap = self.join_filter_max_keys
             records_cache: dict[str, int] = {}
 
+            def _prunes_on(base: str, col: str) -> bool:
+                meta = _meta_of(base)
+                keys = [d["source"] for d in meta.partition_spec]
+                keys += [d["col"] for d in meta.sort_order[:1]]
+                return col.lower() in {k.lower() for k in keys}
+
             def _records_of(base: str) -> int:
                 if base not in records_cache:
                     try:
-                        meta = load_metadata(self._location(base))
+                        meta = _meta_of(base)
                         records_cache[base] = sum(
                             e.records
                             for e in meta.read_manifest(meta.current_snapshot())
@@ -444,6 +475,8 @@ class Catalog:
                 extra_exprs, tags = [], []
                 for my_col, other_name, other_span, other_col in info.equi:
                     try:
+                        if not _prunes_on(info.ref.split("$")[0], my_col):
+                            continue
                         if other_span is not None and other_span in span_to_view:
                             # an UNFILTERED lakehouse other side offers
                             # its full key domain — only worth collecting

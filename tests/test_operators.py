@@ -182,6 +182,35 @@ def test_incremental_dedup_within_batch_and_persisted_bloom(spark, docs):
     assert with_bits == {k: tuple(v) for k, v in wb.items()}
 
 
+def test_incremental_dedup_bloom_built_with_non_default_k(spark, docs):
+    """The persisted-bloom probe derives its positions with the k /
+    bits_per_pos the bits were built with: a k=3, 20-bit bloom gives
+    the same flags as no pre-filter at all (zero false negatives)."""
+    from swiftlake_spark.operators.dedup import (
+        bloom_bits,
+        incremental_dedup,
+        signature_index,
+    )
+
+    corpus = docs.filter(F.col("doc_id") < 40).select("doc_id", "text")
+    index_bands = signature_index(corpus, "doc_id", "text",
+                                  n_hashes=16, bands=8)
+    batch = docs.filter(F.col("doc_id").isin(3, 7, 60, 61)).select(
+        (F.col("doc_id") + 1000).alias("doc_id"), "text")
+    key = F.concat_ws(":", F.col("band").cast("string"),
+                      F.col("bh").cast("string"))
+    bits = bloom_bits(index_bands.select(key.alias("bk")), "bk",
+                      k=3, bits_per_pos=20)
+    want = {r["id"]: tuple(r) for r in incremental_dedup(
+        index_bands, batch, "doc_id", "text", n_hashes=16, bands=8,
+        bloom_prefilter=False).collect()}
+    got = {r["id"]: tuple(r) for r in incremental_dedup(
+        index_bands, batch, "doc_id", "text", n_hashes=16, bands=8,
+        index_bloom_bits=bits, bloom_k=3, bloom_bits_per_pos=20).collect()}
+    assert got == want
+    assert want[1003][1] and want[1007][1]  # the index copies are found
+
+
 def test_incremental_dedup_exact_dups_never_escape(spark):
     """Zero false negatives for exact duplicates, by construction:
     identical text → identical signature → every band collides, under

@@ -12,6 +12,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -455,3 +456,73 @@ class TestResolveSqlPruning:
              "WHERE o_custkey = 3 AND o_orderkey < 20 ORDER BY o_orderkey")
         assert [r.o_orderkey for r in eng.sql(q).collect()] == [3, 13]
         assert seen[-1].pruned_files > 0
+
+    @pytest.mark.parametrize("q", [
+        "SELECT a.o_orderkey, b.o_totalprice FROM db.orders a JOIN db.orders b "
+        "ON a.o_orderkey = b.o_orderkey WHERE b.o_custkey = 3",
+        "SELECT o.o_orderkey, o.o_totalprice FROM db.orders o "
+        "JOIN jf_keys f ON o.o_orderkey = f.k",
+    ])
+    def test_join_filter_pushdown_skips_keys_that_cannot_prune(self, eng, spark, q):
+        """o_orderkey is neither a partition source (the spec buckets
+        o_custkey) nor a sort column, so an IN set on it could prune no
+        file: resolve_sql must not spend a Spark job collecting it."""
+        spark.createDataFrame([(3,), (13,)], "k BIGINT") \
+            .createOrReplaceTempView("jf_keys")
+        sc = spark.sparkContext
+        group = f"resolve-sql-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "resolve_sql")
+        try:
+            eng.catalog.resolve_sql(q)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        got = sorted(tuple(r) for r in eng.sql(q).collect())
+        assert got
+        eng.catalog.join_filter_pushdown = False
+        try:
+            assert sorted(tuple(r) for r in eng.sql(q).collect()) == got
+        finally:
+            eng.catalog.join_filter_pushdown = True
+
+    def test_resolve_sql_loads_each_table_metadata_once(self, eng, spark, monkeypatch):
+        """Schema lookup, record count and scans of one base table share
+        a single metadata load per resolve_sql call, so a query plans
+        against one snapshot even if another handle commits meanwhile."""
+        from collections import Counter
+
+        from swiftlake_spark.tables import catalog as catalog_mod
+        from swiftlake_spark.tables import metadata as metadata_mod
+
+        sch = "l_orderkey BIGINT, l_qty DOUBLE"
+        eng.catalog.create_table(
+            "db.li3", sch, partition_spec=["bucket(4, l_orderkey)"]
+        )
+        eng.insert_into("db.li3").dataframe(spark.createDataFrame(
+            [(i % 100, float(i)) for i in range(300)], schema=sch)).execute()
+
+        calls = Counter()
+        real = metadata_mod.load_metadata
+
+        def counting(location):
+            calls[os.path.basename(location)] += 1
+            return real(location)
+
+        monkeypatch.setattr(metadata_mod, "load_metadata", counting)
+        monkeypatch.setattr(catalog_mod, "load_metadata", counting)
+        seen = self._scans(eng)
+        # li3's key collection runs (bucketed on l_orderkey), reading
+        # orders' record count, and re-plans li3 with the IN set: two li3
+        # scans.  orders' own edge is skipped.
+        eng.catalog.resolve_sql(
+            "SELECT l.l_qty FROM db.li3 l JOIN db.orders o "
+            "ON l.l_orderkey = o.o_orderkey WHERE l.l_qty < 50"
+        )
+        assert [m.table.rsplit("/", 1)[-1] for m in seen].count("li3") == 2
+        assert calls == Counter({"li3": 1, "orders": 1})
+        calls.clear()
+        eng.catalog.resolve_sql(
+            "SELECT a.o_orderkey FROM db.orders a JOIN db.orders b "
+            "ON a.o_orderkey = b.o_orderkey WHERE a.o_custkey = 3"
+        )
+        assert calls == Counter({"orders": 1})
