@@ -4,8 +4,8 @@ The Spark-first counterpart of the reference's ``SwiftLakeEngine``
 (``core/.../SwiftLakeEngine.java:82-151``): owns the session, resolves
 table names, runs SQL, and hands out DML builders.  Where the reference
 rewrites SQL so Iceberg tables become DuckDB ``read_parquet`` subqueries,
-here table names resolve to DataFrames registered as temp views and
-Catalyst does the rest — no string rewriting on the query path.
+here each table name becomes a placeholder for a pruned DataFrame that
+PySpark binds for that one statement, and Catalyst does the rest.
 
 Tables come from the engine's catalog (the snapshot-based lakehouse
 format in ``swiftlake_spark.tables``) or from raw parquet directories
@@ -132,11 +132,12 @@ class SwiftLakeEngine:
         transform=None,
     ) -> DataFrame:
         """Run SQL.  Lakehouse tables referenced as ``db.t`` (with optional
-        time-travel suffix) are resolved to temp views before Catalyst
-        sees the query.  ``args`` binds named (``:name``) or positional
-        (``?``) parameter markers — the Spark-native counterpart of the
-        reference's typed JDBC prepared statements
-        (sql/SwiftLakePreparedStatement.java:179-500, A25).
+        time-travel suffix) are resolved to pruned DataFrames scoped to
+        this query: nothing is left in the session catalog, and the
+        statement reads one snapshot per table.  ``args`` binds named
+        (``:name``) or positional (``?``) parameter markers — the
+        Spark-native counterpart of the reference's typed JDBC prepared
+        statements (sql/SwiftLakePreparedStatement.java:179-500, A25).
 
         ``transform`` (a ``str -> str`` callable) and the engine-level
         ``config.sql_transformers`` list rewrite the statement text
@@ -189,13 +190,12 @@ class SwiftLakeEngine:
                         "parameter markers are not supported in DML statements"
                     )
                 return sqldml.execute_dml(self, sql)
+        frames: dict = {}
         if self.warehouse is not None:
             # instantiate the catalog if needed — resolution must not
             # depend on whether something touched engine.catalog first
-            sql = self.catalog.resolve_sql(sql)
-        if args is not None:
-            return self.spark.sql(sql, args=args)
-        return self.spark.sql(sql)
+            sql, frames = self.catalog.resolve_sql(sql)
+        return self.spark.sql(sql, args=args, **frames)
 
     def execute(
         self,

@@ -14,6 +14,7 @@ import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from swiftlake_spark.tables.metadata import (
@@ -274,23 +275,29 @@ class Catalog:
         out.append(sql[last:])
         return "".join(out)
 
-    def resolve_sql(self, sql: str) -> str:
-        """Replace ``db.table[$suffix]`` references with registered temp
-        views so ``spark.sql`` can run the query — and prune each view's
-        manifest with the WHERE conjuncts provably local to that table
-        (tables/sqlextract.py; ≙ SqlQueryProcessor.java:130-236, which
-        extracts per-table conditions before planning file lists).
-        Catalyst does all real analysis; extraction only shrinks the
-        file list (never re-applied to rows — filter_rows=False), so a
-        skipped or unparseable conjunct costs pruning, not correctness.
-        Spark's ``TIMESTAMP/VERSION AS OF`` spelling is normalized to
-        the ``$suffix`` sugar first (:meth:`_rewrite_as_of`).
+    def resolve_sql(self, sql: str) -> tuple[str, dict[str, DataFrame]]:
+        """Turn ``db.table[$suffix]`` references into per-query relations:
+        returns ``(template, frames)`` for ``spark.sql(template, **frames)``.
+        Each reference becomes a ``{tN}`` placeholder naming a DataFrame in
+        ``frames``, and every other brace is doubled.  PySpark registers
+        the frames under uuid names only while the statement is analysed,
+        so no two queries share a relation and nothing outlives the call.
+        Without a lakehouse reference the text is returned untouched with
+        no frames (``spark.sql`` formats only when given frames).
+
+        Each relation's manifest is pruned with the WHERE conjuncts
+        provably local to that table (tables/sqlextract.py; ≙
+        SqlQueryProcessor.java:130-236, which extracts per-table
+        conditions before planning file lists).  Catalyst does all real
+        analysis; extraction only shrinks the file list (never re-applied
+        to rows — filter_rows=False), so a skipped or unparseable conjunct
+        costs pruning, not correctness.  Spark's ``TIMESTAMP/VERSION AS
+        OF`` spelling is normalized to the ``$suffix`` sugar first
+        (:meth:`_rewrite_as_of`).
 
         Each base table's metadata is loaded once per call and feeds its
         schema, record count and every scan of it, so the whole query
         plans against one snapshot even while other handles commit."""
-        import hashlib as _hl
-
         from swiftlake_spark.dml.sqlfilter import parse_filter
         from swiftlake_spark.tables import expressions as E
         from swiftlake_spark.tables.sqlextract import analyze, mask_literals
@@ -314,7 +321,7 @@ class Catalog:
             if _exists(m.group(1).split("$")[0])
         ]
         if not occs:
-            return sql
+            return sql, {}
 
         metas: dict[str, TableMetadata] = {}
 
@@ -351,12 +358,12 @@ class Catalog:
             except Exception:  # noqa: BLE001 — extraction is best-effort
                 infos = {}
 
-        # group occurrences per ref text: an occurrence is a FROM table
-        # (analysis matched its span), a column qualifier (followed by
-        # ``.word``), or other.  Filters are only safe per-occurrence when
-        # EVERY occurrence is a FROM ref; with exactly one FROM ref the
-        # qualifiers denote that same instance and share its view; any
-        # other mix falls back to one shared unpruned view.
+        # an occurrence is a FROM table (analysis matched its span), a
+        # column qualifier (followed by ``.word``), or other.  Filters are
+        # only safe per-occurrence when EVERY occurrence of a ref is a
+        # FROM ref; with exactly one FROM ref the qualifiers denote that
+        # same instance and share its relation; any other mix falls back
+        # to one shared unpruned relation.  groups: (ref, info, occs).
         by_ref: dict[str, dict[str, list]] = {}
         for m in occs:
             g = by_ref.setdefault(m.group(1), {"from": [], "qual": [], "other": []})
@@ -368,178 +375,136 @@ class Catalog:
                     g["qual"].append(m)
                 else:
                     g["other"].append(m)
-
-        registered: dict[tuple[str, str], str] = {}
-
-        def _register(ref: str, info, extra=None, extra_tag: str = "") -> str:
-            exprs, texts = [], []
-            if info is not None and info.conjuncts:
-                st = _struct_of(ref.split("$")[0])
-                for c in info.conjuncts:
-                    try:
-                        exprs.append(parse_filter(c, st))
-                        texts.append(c)
-                    except Exception:  # unparseable conjunct → skip it
-                        pass
-            if extra is not None:
-                exprs.append(extra)
-                texts.append(extra_tag)
-            ftext = " AND ".join(texts)
-            key = (ref, ftext)
-            if key in registered:
-                return registered[key]
-            # a short digest disambiguates refs that collapse to the same
-            # sanitized name (db.t$branch_x vs a real table db.t_branch_x);
-            # the filter text joins the digest so differently-pruned views
-            # of one table never collide (same text → same name → safe
-            # re-registration with identical content)
-            digest = ref if not ftext else ref + "\x00" + ftext
-            view = (
-                "swl_" + re.sub(r"[^\w]", "_", ref)
-                + "_" + _hl.md5(digest.encode()).hexdigest()[:6]
-            )
-            expr = E.and_(*exprs) if exprs else None
-            self._scan(_meta_of(ref.split("$")[0]), ref, expr,
-                       filter_rows=False).createOrReplaceTempView(view)
-            registered[key] = view
-            return view
-
-        occ_view: dict[int, str] = {}
-        # FROM occurrences eligible for join-filter strengthening: their
-        # view is exclusively theirs (per-occurrence or single-FROM
-        # plan).  followers: occurrence ids (qualifiers) that must adopt
-        # a strengthened view name along with their FROM occurrence.
-        solo: list = []
-        followers: dict[int, list[int]] = {}
+        groups: list[tuple[str, Any, list]] = []
         for ref, g in by_ref.items():
-            all_ms = g["from"] + g["qual"] + g["other"]
             if not g["qual"] and not g["other"]:
-                for m in g["from"]:
-                    occ_view[id(m)] = _register(ref, infos[m.span(1)])
-                    solo.append(m)
-                    followers[id(m)] = []
+                groups += [(ref, infos[m.span(1)], [m]) for m in g["from"]]
             elif len(g["from"]) == 1 and not g["other"]:
-                view = _register(ref, infos[g["from"][0].span(1)])
-                for m in all_ms:
-                    occ_view[id(m)] = view
-                solo.append(g["from"][0])
-                followers[id(g["from"][0])] = [
-                    id(m) for m in g["qual"]
-                ]
+                groups.append((ref, infos[g["from"][0].span(1)], g["from"] + g["qual"]))
             else:
-                view = _register(ref, None)
-                for m in all_ms:
-                    occ_view[id(m)] = view
+                groups.append((ref, None, g["from"] + g["qual"] + g["other"]))
+
+        def _conjuncts(info) -> list[tuple[str, Any]]:
+            """``info``'s parseable conjuncts as (text, expression)."""
+            if info is None:
+                return []
+            st = _struct_of(info.ref.split("$")[0])
+            out = []
+            for c in info.conjuncts:
+                try:
+                    out.append((c, parse_filter(c, st)))
+                except Exception:  # unparseable conjunct → skip it
+                    pass
+            return out
+
+        base_frames: dict[tuple[str, str], DataFrame] = {}
+
+        def _frame(ref: str, info, extra=()) -> DataFrame:
+            """``ref``'s scan pruned by ``info``'s conjuncts and the
+            ``extra`` expressions; unstrengthened scans are shared."""
+            parsed = _conjuncts(info)
+            exprs = [e for _, e in parsed] + list(extra)
+            key = (ref, " AND ".join(c for c, _ in parsed))
+            if not extra and key in base_frames:
+                return base_frames[key]
+            df = self._scan(_meta_of(ref.split("$")[0]), ref,
+                            E.and_(*exprs) if exprs else None, filter_rows=False)
+            if not extra:
+                base_frames[key] = df
+            return df
 
         # ---- join-filter pushdown (README "Joining with a filter
         # table"): an inner-join equi edge lets this table's manifest be
         # pruned by the OTHER side's distinct key set.  The keys are
-        # collected from the other side's already-registered PRUNE-ONLY
-        # view (a superset of its true rows — sound) or, for plain Spark
-        # relations, the raw view; collection is bounded by
-        # join_filter_max_keys and abandoned beyond it.  Like the base
-        # extraction this only shrinks file lists; rows still come from
-        # the original SQL.  An IN set only prunes files when the key's
-        # values are confined per file — a partition source column
-        # (partition values) or the leading sort column (narrow min/max)
-        # — so any other edge is skipped from the metadata alone,
-        # before a Spark job is spent on its keys.
-        if self.join_filter_pushdown and solo:
-            from pyspark.sql import functions as _F
+        # collected from the other side's PRUNE-ONLY relation (a superset
+        # of its true rows — sound) or, for plain Spark relations, the
+        # raw view; collection is bounded by join_filter_max_keys and
+        # abandoned beyond it.  Like the base extraction this only
+        # shrinks file lists; rows still come from the original SQL.  An
+        # IN set only prunes files when the key's values are confined per
+        # file — a partition source column (partition values) or the
+        # leading sort column (narrow min/max) — so any other edge is
+        # skipped from the metadata alone, before a Spark job is spent on
+        # its keys.
+        cap = self.join_filter_max_keys
+        records_cache: dict[str, int] = {}
 
-            span_to_view = {m.span(1): occ_view[id(m)] for m in occs}
-            cap = self.join_filter_max_keys
-            records_cache: dict[str, int] = {}
+        def _prunes_on(base: str, col: str) -> bool:
+            meta = _meta_of(base)
+            keys = [d["source"] for d in meta.partition_spec]
+            keys += [d["col"] for d in meta.sort_order[:1]]
+            return col.lower() in {k.lower() for k in keys}
 
-            def _prunes_on(base: str, col: str) -> bool:
-                meta = _meta_of(base)
-                keys = [d["source"] for d in meta.partition_spec]
-                keys += [d["col"] for d in meta.sort_order[:1]]
-                return col.lower() in {k.lower() for k in keys}
-
-            def _records_of(base: str) -> int:
-                if base not in records_cache:
-                    try:
-                        meta = _meta_of(base)
-                        records_cache[base] = sum(
-                            e.records
-                            for e in meta.read_manifest(meta.current_snapshot())
-                        )
-                    except Exception:  # noqa: BLE001
-                        records_cache[base] = 1 << 62
-                return records_cache[base]
-            for m in solo:
-                info = infos[m.span(1)]
-                if not info.equi:
-                    continue
-                extra_exprs, tags = [], []
-                for my_col, other_name, other_span, other_col in info.equi:
-                    try:
-                        if not _prunes_on(info.ref.split("$")[0], my_col):
-                            continue
-                        if other_span is not None and other_span in span_to_view:
-                            # an UNFILTERED lakehouse other side offers
-                            # its full key domain — only worth collecting
-                            # when the table itself is tiny (a true dim,
-                            # per its manifest record count); otherwise
-                            # the IN set can't beat the base prune and
-                            # the distinct job is wasted
-                            oinfo0 = infos.get(other_span)
-                            if oinfo0 is None or not oinfo0.conjuncts:
-                                base_o = (oinfo0.ref.split("$")[0]
-                                          if oinfo0 is not None else None)
-                                if base_o is None or _records_of(base_o) > cap * 50:
-                                    continue
-                            odf = self.spark.table(span_to_view[other_span])
-                            # the other side's view is PRUNE-ONLY; its
-                            # extracted conjuncts (implied by the real
-                            # WHERE) row-filter the KEY COLLECTION so the
-                            # key set reflects the dim's selectivity —
-                            # still a superset of the join-reachable keys
-                            oinfo = infos.get(other_span)
-                            if oinfo is not None and oinfo.conjuncts:
-                                ost = _struct_of(oinfo.ref.split("$")[0])
-                                for c in oinfo.conjuncts:
-                                    try:
-                                        odf = odf.where(
-                                            parse_filter(c, ost).column()
-                                        )
-                                    except Exception:  # noqa: BLE001
-                                        pass
-                        elif other_name is not None and "." not in other_name:
-                            odf = self.spark.table(other_name)
-                        else:
-                            continue
-                        rows = (
-                            odf.select(other_col)
-                            .where(_F.col(other_col).isNotNull())
-                            .distinct().limit(cap + 1).collect()
-                        )
-                        if len(rows) > cap:
-                            continue
-                        vals = [r[0] for r in rows]
-                        extra_exprs.append(E.in_(my_col, vals))
-                        digest = _hl.md5(
-                            repr(sorted(map(repr, vals))).encode()
-                        ).hexdigest()[:8]
-                        tags.append(f"__jf_{my_col}_{digest}")
-                    except Exception:  # noqa: BLE001 — pushdown is best-effort
-                        continue
-                if extra_exprs:
-                    view = _register(
-                        info.ref, info, E.and_(*extra_exprs), " AND ".join(tags)
+        def _records_of(base: str) -> int:
+            if base not in records_cache:
+                try:
+                    meta = _meta_of(base)
+                    records_cache[base] = sum(
+                        e.records
+                        for e in meta.read_manifest(meta.current_snapshot())
                     )
-                    occ_view[id(m)] = view
-                    for fid in followers.get(id(m), []):
-                        occ_view[fid] = view
+                except Exception:  # noqa: BLE001
+                    records_cache[base] = 1 << 62
+            return records_cache[base]
+
+        def _join_filters(info) -> list:
+            out = []
+            for my_col, other_name, other_span, other_col in info.equi:
+                try:
+                    if not _prunes_on(info.ref.split("$")[0], my_col):
+                        continue
+                    oinfo = infos.get(other_span)
+                    if oinfo is not None:
+                        # an UNFILTERED lakehouse other side offers its
+                        # full key domain — only worth collecting when the
+                        # table itself is tiny (a true dim, per its
+                        # manifest record count); otherwise the IN set
+                        # can't beat the base prune and the distinct job
+                        # is wasted
+                        if (not oinfo.conjuncts
+                                and _records_of(oinfo.ref.split("$")[0]) > cap * 50):
+                            continue
+                        # its extracted conjuncts (implied by the real
+                        # WHERE) row-filter the KEY COLLECTION so the key
+                        # set reflects the dim's selectivity — still a
+                        # superset of the join-reachable keys
+                        odf = _frame(oinfo.ref, oinfo)
+                        for _, e in _conjuncts(oinfo):
+                            odf = odf.where(e.column())
+                    elif other_name is not None and "." not in other_name:
+                        odf = self.spark.table(other_name)
+                    else:
+                        continue
+                    rows = (
+                        odf.select(other_col)
+                        .where(F.col(other_col).isNotNull())
+                        .distinct().limit(cap + 1).collect()
+                    )
+                    if len(rows) <= cap:
+                        out.append(E.in_(my_col, [r[0] for r in rows]))
+                except Exception:  # noqa: BLE001 — pushdown is best-effort
+                    continue
+            return out
+
+        frames: dict[str, DataFrame] = {}
+        names: dict[int, str] = {}
+        for ref, info, ms in groups:
+            extra = (_join_filters(info)
+                     if self.join_filter_pushdown and info is not None else ())
+            name = f"t{len(frames)}"
+            frames[name] = _frame(ref, info, extra)
+            names.update((id(m), name) for m in ms)
+
+        def _escape(text: str) -> str:
+            return text.replace("{", "{{").replace("}", "}}")
 
         out, last = [], 0
         for m in sorted(occs, key=lambda m: m.start(1)):
-            out.append(sql[last:m.start(1)])
-            out.append(occ_view[id(m)])
+            out.append(_escape(sql[last:m.start(1)]))
+            out.append("{" + names[id(m)] + "}")
             last = m.end(1)
-        out.append(sql[last:])
-        return "".join(out)
+        out.append(_escape(sql[last:]))
+        return "".join(out), frames
 
     # ----------------------------------------------------------- helpers
     def _location(self, name: str) -> str:

@@ -1,8 +1,8 @@
 """Conservative per-table predicate extraction from SQL text.
 
 ``engine.sql("SELECT ... FROM db.t WHERE ...")`` resolves lakehouse
-names to temp views (catalog.resolve_sql); without extraction those
-views are UNPRUNED scans — Catalyst pushes the filter into the parquet
+names to per-query DataFrames (catalog.resolve_sql); without extraction
+those are UNPRUNED scans — Catalyst pushes the filter into the parquet
 reader, but the manifest prune (skip whole files/partitions before
 Spark ever lists them) never fires.  At 100 TB that is the difference
 between planning 40 files and planning 400,000.

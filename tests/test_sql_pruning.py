@@ -369,8 +369,8 @@ class TestResolveSqlPruning:
              "WHERE a.o_custkey = 3 AND b.o_custkey = 3 AND b.o_totalprice < 10")
         assert [r.o_orderkey for r in eng.sql(q).collect()] == [3]
         # both occurrences scanned pruned (custkey=3 hits one bucket
-        # each); join-filter pushdown may re-register each side once
-        # more, equally pruned
+        # each); join-filter key collection may plan a side once more,
+        # equally pruned
         assert seen and all(m.scanned_files == 1 for m in seen)
 
     def test_ambiguous_qualifier_falls_back_unpruned(self, eng):
@@ -443,6 +443,46 @@ class TestResolveSqlPruning:
         assert [r.k for r in rows][0] == 3
         assert all(r.k is None for r in rows[1:])
 
+    def test_sql_leaves_no_temp_views(self, eng, spark):
+        """Each statement's relations are scoped to it: the session
+        catalog does not grow with the number of distinct queries."""
+        def temp_views():
+            return sum(t.isTemporary for t in spark.catalog.listTables())
+
+        before = temp_views()
+        for i in range(20):
+            eng.sql(f"SELECT count(*) FROM db.orders "
+                    f"WHERE o_orderkey BETWEEN {i} AND {i + 50}").collect()
+        assert temp_views() == before
+
+    def test_resolved_query_keeps_its_snapshot(self, eng, spark):
+        """A resolved statement reads the snapshot it was planned on,
+        even after a commit and another caller resolving the same text."""
+        q = "SELECT count(*) AS n FROM db.orders WHERE o_custkey = 3"
+        sql, frames = eng.catalog.resolve_sql(q)
+        t = eng.catalog.table("db.orders")
+        eng.insert_into("db.orders").dataframe(spark.createDataFrame(
+            [(100, 3, 1.0, dt.datetime(1996, 1, 1), "A")], schema=t.schema
+        )).execute()
+        eng.catalog.resolve_sql(q)
+        assert spark.sql(sql, **frames).collect()[0]["n"] == 10
+        assert eng.sql(q).collect()[0]["n"] == 11
+
+    def test_braces_in_sql_text_survive(self, eng, spark, monkeypatch):
+        q = ("SELECT '{x}' AS a, '}{' AS b, o_orderkey FROM db.orders "
+             "WHERE o_orderkey = 3")
+        assert [tuple(r) for r in eng.sql(q).collect()] == [("{x}", "}{", 3)]
+        # without a lakehouse ref the text reaches spark.sql unchanged
+        calls = []
+        real = spark.sql
+        monkeypatch.setattr(
+            spark, "sql",
+            lambda text, *a, **kw: calls.append((text, kw)) or real(text, *a, **kw),
+        )
+        plain = "SELECT '{x}' AS a, '}}' AS b"
+        assert [tuple(r) for r in eng.sql(plain).collect()] == [("{x}", "}}")]
+        assert [text for text, _ in calls] == [plain]
+
     def test_join_filter_pushdown_empty_dim_short_circuits(self, eng, spark):
         spark.createDataFrame([], "k BIGINT") \
             .createOrReplaceTempView("no_keys")
@@ -512,13 +552,13 @@ class TestResolveSqlPruning:
         monkeypatch.setattr(catalog_mod, "load_metadata", counting)
         seen = self._scans(eng)
         # li3's key collection runs (bucketed on l_orderkey), reading
-        # orders' record count, and re-plans li3 with the IN set: two li3
-        # scans.  orders' own edge is skipped.
+        # orders' record count, and plans li3 once, with the IN set.
+        # orders' own edge is skipped.
         eng.catalog.resolve_sql(
             "SELECT l.l_qty FROM db.li3 l JOIN db.orders o "
             "ON l.l_orderkey = o.o_orderkey WHERE l.l_qty < 50"
         )
-        assert [m.table.rsplit("/", 1)[-1] for m in seen].count("li3") == 2
+        assert [m.table.rsplit("/", 1)[-1] for m in seen].count("li3") == 1
         assert calls == Counter({"li3": 1, "orders": 1})
         calls.clear()
         eng.catalog.resolve_sql(

@@ -167,18 +167,18 @@ def test_catalog_iso_timestamp_sugar(catalog, simple_table, spark):
     )
     assert catalog.load(f"db.simple$timestamp_{iso}").count() == 5
     # the same form resolves inside SQL text (colons included)
-    sql = catalog.resolve_sql(
+    sql, frames = catalog.resolve_sql(
         f"SELECT COUNT(*) AS n FROM db.simple$timestamp_{iso}"
     )
-    assert spark.sql(sql).collect()[0]["n"] == 5
+    assert spark.sql(sql, **frames).collect()[0]["n"] == 5
     with pytest.raises(ValueError, match="bad .timestamp"):
         catalog.load("db.simple$timestamp_not-a-time")
 
 
 def test_resolve_sql(catalog, simple_table, spark):
-    sql = catalog.resolve_sql("SELECT count(*) AS n FROM db.simple WHERE category = 'X'")
+    sql, frames = catalog.resolve_sql("SELECT count(*) AS n FROM db.simple WHERE category = 'X'")
     assert "db.simple" not in sql
-    assert spark.sql(sql).collect()[0]["n"] == 2
+    assert spark.sql(sql, **frames).collect()[0]["n"] == 2
 
 
 def test_overwrite_by_filter_strict(catalog, spark):
@@ -306,12 +306,12 @@ def test_sorted_write_files_are_sorted(catalog, spark):
 
 
 def test_resolve_sql_ignores_string_literals(catalog, simple_table, spark):
-    sql = catalog.resolve_sql(
+    sql, frames = catalog.resolve_sql(
         "SELECT count(*) AS n FROM db.simple WHERE name = 'db.simple' OR name = 'x.y'"
     )
     assert "'db.simple'" in sql and "'x.y'" in sql  # literals untouched
-    assert sql.count("swl_db_simple") == 1  # table ref rewritten
-    assert spark.sql(sql).collect()[0]["n"] == 0
+    assert list(frames) == ["t0"] and sql.count("{t0}") == 1  # table ref rewritten
+    assert spark.sql(sql, **frames).collect()[0]["n"] == 0
 
 
 def test_many_concurrent_appends_all_land(catalog, spark):
@@ -532,10 +532,10 @@ def test_catalog_iso_timestamp_with_offset(catalog, simple_table, spark):
         s1.timestamp_ms / 1000, tz=dt.timezone(dt.timedelta(hours=2))
     ).isoformat()
     assert catalog.load(f"db.simple$timestamp_{local}").count() == 5
-    sql = catalog.resolve_sql(
+    sql, frames = catalog.resolve_sql(
         f"SELECT COUNT(*) AS n FROM db.simple$timestamp_{local}"
     )
-    assert spark.sql(sql).collect()[0]["n"] == 5
+    assert spark.sql(sql, **frames).collect()[0]["n"] == 5
 
 
 def test_spark_as_of_spelling(catalog, simple_table, spark):
@@ -546,30 +546,30 @@ def test_spark_as_of_spelling(catalog, simple_table, spark):
         spark.createDataFrame([(9, "x", "Q", 0.0)], schema=simple_table.schema)
     )
     # VERSION AS OF <snapshot id>
-    sql = catalog.resolve_sql(
+    sql, frames = catalog.resolve_sql(
         f"SELECT COUNT(*) AS n FROM db.simple VERSION AS OF {s1.snapshot_id}"
     )
-    assert spark.sql(sql).collect()[0]["n"] == 5
+    assert spark.sql(sql, **frames).collect()[0]["n"] == 5
     # TIMESTAMP AS OF '<iso with space>'
     iso = (
         dt.datetime.fromtimestamp(s1.timestamp_ms / 1000, tz=dt.timezone.utc)
         .replace(tzinfo=None)
         .isoformat(sep=" ")
     )
-    sql = catalog.resolve_sql(
+    sql, frames = catalog.resolve_sql(
         f"SELECT COUNT(*) AS n FROM db.simple TIMESTAMP AS OF '{iso}'"
     )
-    assert spark.sql(sql).collect()[0]["n"] == 5
+    assert spark.sql(sql, **frames).collect()[0]["n"] == 5
     # FOR SYSTEM_TIME AS OF variant
-    sql = catalog.resolve_sql(
+    sql, frames = catalog.resolve_sql(
         f"SELECT COUNT(*) AS n FROM db.simple FOR SYSTEM_TIME AS OF '{iso}'"
     )
-    assert spark.sql(sql).collect()[0]["n"] == 5
+    assert spark.sql(sql, **frames).collect()[0]["n"] == 5
     # a string literal containing the pattern is untouched
-    sql = catalog.resolve_sql(
+    sql, frames = catalog.resolve_sql(
         "SELECT 'db.simple TIMESTAMP AS OF ''2020-01-01''' AS s FROM db.simple"
     )
-    assert spark.sql(sql).count() == 6
+    assert spark.sql(sql, **frames).count() == 6
     # VERSION AS OF with a non-numeric arg points at the branch/tag sugar
     with pytest.raises(ValueError, match="branch"):
         catalog.resolve_sql("SELECT * FROM db.simple VERSION AS OF 'dev'")
