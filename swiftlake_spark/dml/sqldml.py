@@ -39,10 +39,10 @@ parse from raw text — their payload is DDL type syntax
 Each parses into the corresponding builder (dml/update.py, delete.py,
 merge.py) — the statement text is never handed to Catalyst, so COW
 rewrite, manifest pruning, conflict detection and snapshot commit all
-behave exactly as the builder API.  The parse reuses the conservative
-scanner from tables/sqlextract.py (literal masking, comment rejection);
-anything outside the supported grammar raises ValidationError with the
-reason, never a silent misread.
+behave exactly as the builder API.  The parse uses the conservative
+scanner below (literal masking, comment rejection); anything outside
+the supported grammar raises ValidationError with the reason, never a
+silent misread.
 
 MERGE ON-clause subset (sound by construction):
 
@@ -76,7 +76,64 @@ from pyspark.sql import DataFrame
 from swiftlake_spark.dml.scd_common import require
 from swiftlake_spark.dml.sqlfilter import parse_filter
 from swiftlake_spark.tables.metadata import ValidationError
-from swiftlake_spark.tables.sqlextract import _nesting, _scan, _Tok, mask_literals
+
+# --------------------------------------------------------------- scanner
+
+_TOKEN_RE = re.compile(
+    r"""\s*(?:
+        (?P<str>'(?:[^']|'')*')
+      | (?P<word>[A-Za-z_][A-Za-z0-9_$.]*)
+      | (?P<num>\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
+      | (?P<lp>\()
+      | (?P<rp>\))
+      | (?P<comma>,)
+      | (?P<op><=|>=|<>|!=|=|<|>|\|\||[+\-*/%.])
+    )""",
+    re.VERBOSE,
+)
+
+
+@dataclass
+class _Tok:
+    kind: str
+    text: str
+    start: int
+    end: int
+
+    @property
+    def up(self) -> str:
+        return self.text.upper()
+
+
+def mask_literals(sql: str) -> str:
+    """Same-length copy with every quoted literal's content turned to
+    'x' runs — positions line up with the original, and literal text can
+    no longer fake keywords, refs, or parens."""
+    parts = re.split(r"('(?:[^']|'')*')", sql)
+    return "".join(
+        p if i % 2 == 0 else "'" + "x" * (len(p) - 2) + "'"
+        for i, p in enumerate(parts)
+    )
+
+
+# A bare CASE token is a column *identifier* (Spark keeps CASE/END
+# non-reserved) exactly when the next token could only follow a complete
+# operand: a comparison, a predicate keyword, a closing paren/comma, or
+# end of clause.  A real CASE expression is instead followed by WHEN or
+# by its comparand (word/literal/'(' — and, for `CASE -x WHEN`, a sign).
+_IDENT_CASE_NEXT_OPS = {"=", "<", ">", "<=", ">=", "<>", "!="}
+_IDENT_CASE_NEXT_KWS = {"AND", "OR", "IS", "IN", "NOT", "LIKE", "ILIKE", "BETWEEN"}
+# A bare END token is an *identifier* exactly when the previous token
+# could not terminate a CASE branch value: clause start, an operator, a
+# paren/comma opener, or a predicate/branch keyword.  A closing END is
+# always preceded by a value terminal (word/number/string/')').
+_IDENT_END_PREV_KWS = {
+    "AND", "OR", "NOT", "WHEN", "THEN", "ELSE", "IN", "LIKE", "ILIKE",
+    "BETWEEN", "IS", "CASE", "ESCAPE", "ALL", "ANY", "SOME", "DISTINCT",
+    "SELECT", "BY", "ON", "WHERE", "HAVING",
+    "SET",  # UPDATE ... SET end = 0
+}
+
 
 _DML_HEAD = re.compile(r"^\s*(UPDATE|DELETE|MERGE|INSERT)\b", re.IGNORECASE)
 
@@ -108,16 +165,36 @@ def dml_target(sql: str) -> str | None:
 # --------------------------------------------------------------- helpers
 
 
+_UNTOKENIZABLE = (
+    "could not tokenize DML statement (comments, backticks, parameter "
+    "markers and unrecognized characters are not supported in DML)"
+)
+_UNBALANCED = (
+    "could not parse statement structure (unbalanced parentheses or "
+    "CASE ... END)"
+)
+
+
 def _tokens(sql: str) -> list[_Tok]:
+    """Tokens of ``sql``, matched on its literal-masked copy (spans line
+    up with ``sql``); anything unrecognized is rejected, never guessed."""
     masked = mask_literals(sql)
-    toks = _scan(masked)
-    if toks is None:
-        raise ValidationError(
-            "could not tokenize DML statement (comments, backticks, "
-            "parameter markers and unrecognized characters are not "
-            "supported in DML)"
-        )
-    return toks
+    # Comments first: '-' and '/' lex as operators, so without this check
+    # a commented-out predicate ("WHERE x = 1 -- AND y = 2") would scan as
+    # live tokens and become part of the statement's condition.  Literal
+    # masking already ran, so '--' inside a string can't trip this.
+    require("--" not in masked and "/*" not in masked, _UNTOKENIZABLE)
+    out: list[_Tok] = []
+    pos = 0
+    while pos < len(masked):
+        m = _TOKEN_RE.match(masked, pos)
+        if m is None:
+            require(not masked[pos:].strip(), _UNTOKENIZABLE)
+            break
+        kind = m.lastgroup
+        out.append(_Tok(kind, m.group(kind), m.start(kind), m.end()))
+        pos = m.end()
+    return out
 
 
 def _slice(sql: str, toks: list[_Tok], lo: int, hi: int) -> str:
@@ -127,17 +204,55 @@ def _slice(sql: str, toks: list[_Tok], lo: int, hi: int) -> str:
     return sql[toks[lo].start : toks[hi - 1].end]
 
 
-def _levels(toks: list[_Tok]) -> list[int]:
-    """Per-token nesting combining parens and CASE...END (sqlextract's
-    identifier-aware tracker, so columns literally named ``case``/``end``
-    don't desync the depth).  Unbalanced structure is an explicit error —
-    the DML grammar never guesses."""
-    lvl = _nesting(toks)
-    require(
-        lvl is not None,
-        "could not parse statement structure (unbalanced parentheses "
-        "or CASE ... END)",
-    )
+def _levels(tokens: list[_Tok]) -> list[int]:
+    """Per-token nesting level combining parentheses and CASE...END, with
+    parens and CASE tracked in SEPARATE counters (ADVICE r8: a single
+    shared counter desyncs when `end` appears as a bare column name,
+    going negative and re-enabling conjunct splits inside a later CASE —
+    which promoted a WHEN-branch condition to a standalone conjunct).
+    Bare identifiers named `case`/`end` are recognized from local context
+    (see the tables above) so sibling conjuncts still split.  Anything
+    unmatchable — END with no open CASE that isn't provably an
+    identifier, unbalanced parens — is an explicit error: the DML
+    grammar never guesses."""
+    lvl: list[int] = []
+    depth = 0
+    case_depth = 0
+    n = len(tokens)
+    for i, t in enumerate(tokens):
+        if t.kind == "lp":
+            lvl.append(depth + case_depth)
+            depth += 1
+        elif t.kind == "rp":
+            depth -= 1
+            require(depth >= 0, _UNBALANCED)
+            lvl.append(depth + case_depth)
+        elif t.kind == "word" and t.up == "CASE":
+            nxt = tokens[i + 1] if i + 1 < n else None
+            ident = (
+                nxt is None
+                or nxt.kind in ("rp", "comma")
+                or (nxt.kind == "op" and nxt.text in _IDENT_CASE_NEXT_OPS)
+                or (nxt.kind == "word" and nxt.up in _IDENT_CASE_NEXT_KWS)
+            )
+            lvl.append(depth + case_depth)
+            if not ident:
+                case_depth += 1
+        elif t.kind == "word" and t.up == "END":
+            prev = tokens[i - 1] if i else None
+            ident = (
+                prev is None
+                or prev.kind in ("lp", "comma", "op")
+                or (prev.kind == "word" and prev.up in _IDENT_END_PREV_KWS)
+            )
+            if not ident:
+                # a closing END needs a CASE we saw open
+                require(case_depth > 0, _UNBALANCED)
+                case_depth -= 1
+            lvl.append(depth + case_depth)
+        else:
+            lvl.append(depth + case_depth)
+    require(depth == 0 and case_depth == 0, _UNBALANCED)
     return lvl
 
 

@@ -1225,11 +1225,12 @@ def q113_iceberg_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q119 — inline-SQL manifest pruning end-to-end (tables/sqlextract.py +
-# Catalog.resolve_sql; ≙ reference sql/SqlQueryProcessor.java:130-236): a
-# bounded orders slice is written ONCE per (session, sf_dir) into a native
-# table partitioned by year(o_orderdate); the query then runs through
-# engine.sql, whose WHERE extraction must prune the pre-1996 year
+# q119 — inline-SQL manifest pruning end-to-end (Catalog.resolve_sql
+# walking Spark's parsed plan in tables/sqlextract.py; ≙ reference
+# sql/SqlQueryProcessor.java:130-236): a bounded orders slice is written
+# ONCE per (session, sf_dir) into a native table partitioned by
+# year(o_orderdate); the query then runs through engine.sql, whose WHERE
+# extraction must prune the pre-1996 year
 # partitions at the manifest.  VERDICT oracle: the result carries
 # `pruned_ok` — observed via a metric collector on the very scan the SQL
 # planned — so a silent extraction regression (full scan) hash-mismatches
@@ -1295,7 +1296,7 @@ def q119_sql_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "GROUP BY yr ORDER BY yr"
     )
     # the scan for this statement was planned during eng.sql (resolve_sql
-    # loads the view eagerly), so the verdict is already observable
+    # builds its relation eagerly), so the verdict is already observable
     pruned_ok = bool(scans) and all(
         m.pruned_files > 0 and m.scanned_files < m.total_files for m in scans
     )

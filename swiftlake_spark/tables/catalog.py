@@ -31,6 +31,11 @@ _SUFFIX_RE = re.compile(
 )
 
 
+# join-filter pushdown collects at most this many distinct keys of the
+# other side (the reference's IN-list scale); beyond it the edge is dropped
+JOIN_FILTER_MAX_KEYS = 200
+
+
 def _timestamp_arg_ms(arg: str) -> int:
     """``$timestamp_`` argument → epoch ms.  Two spellings: bare digits
     are epoch milliseconds; anything else parses as ISO-8601 — the
@@ -71,16 +76,6 @@ class Catalog:
         # targets); passed by REFERENCE into every Table so collectors
         # registered later still observe existing handles
         self.metric_collectors = metric_collectors if metric_collectors is not None else []
-        # kill-switch for resolve_sql's WHERE-conjunct manifest pruning
-        # (extraction is inclusive-by-construction, but an operator
-        # escape hatch costs nothing)
-        self.sql_pruning = True
-        # join-filter pushdown (reference README "Joining with a filter
-        # table"): for inner-join equi edges, collect the other side's
-        # distinct join keys (bounded) and prune this table's manifest
-        # with an IN filter — manifest-level dynamic partition pruning.
-        self.join_filter_pushdown = True
-        self.join_filter_max_keys = 200
         if "://" not in self.warehouse:
             os.makedirs(self.warehouse, exist_ok=True)
 
@@ -219,62 +214,6 @@ class Catalog:
         return t.scan(filter, **kwargs)
 
     # -------------------------------------------------------------- sql
-    _REF_RE = re.compile(
-        # the arg charset admits ':' and '+' for ISO-8601 offsets — an
-        # arithmetic '+' glued directly onto a $suffix ref without spaces
-        # is not meaningful SQL, so the greed is safe
-        r"(?<![\w.])([A-Za-z_]\w*\.[A-Za-z_]\w*"
-        r"(?:\$(?:timestamp|snapshot|branch|tag)_[\w.:+-]+)?)"
-    )
-
-    _AS_OF_RE = re.compile(
-        r"((?<![\w.])[A-Za-z_]\w*\.[A-Za-z_]\w*)\s+(?:FOR\s+)?"
-        r"(TIMESTAMP|SYSTEM_TIME|VERSION|SYSTEM_VERSION)\s+AS\s+OF\s+"
-        r"('(?:[^']|'')*'|\d+)",
-        re.IGNORECASE,
-    )
-
-    def _rewrite_as_of(self, sql: str) -> str:
-        """Spark's idiomatic time-travel spelling → the engine's
-        ``$suffix`` sugar: ``db.t TIMESTAMP AS OF '2020-01-01 00:00:00'``
-        becomes ``db.t$timestamp_2020-01-01T00:00:00`` and ``db.t
-        VERSION AS OF 42`` becomes ``db.t$snapshot_42`` (SYSTEM_TIME /
-        SYSTEM_VERSION variants accepted).  Only rewrites names that ARE
-        lakehouse tables, so the clause still reaches Spark untouched
-        for its own tables.  Matching runs on the literal-masked copy
-        (same length, offsets align), so quoted text can't fake a ref."""
-        from swiftlake_spark.tables.sqlextract import mask_literals
-
-        masked = mask_literals(sql)
-        out: list[str] = []
-        last = 0
-        for m in self._AS_OF_RE.finditer(masked):
-            name = m.group(1)
-            try:
-                if not self.table_exists(name):
-                    continue
-            except Exception:
-                continue
-            kind = m.group(2).upper()
-            raw = sql[m.start(3) : m.end(3)]
-            arg = raw[1:-1].replace("''", "'").strip() if raw.startswith("'") else raw
-            if kind in ("TIMESTAMP", "SYSTEM_TIME"):
-                suffix = "timestamp_" + arg.replace(" ", "T")
-            else:
-                if not arg.isdigit():
-                    raise ValueError(
-                        f"VERSION AS OF takes a snapshot id; for branches/"
-                        f"tags use {name}$branch_<name> / {name}$tag_<name>"
-                    )
-                suffix = "snapshot_" + arg
-            out.append(sql[last : m.start()])
-            out.append(f"{name}${suffix}")
-            last = m.end()
-        if not out:
-            return sql
-        out.append(sql[last:])
-        return "".join(out)
-
     def resolve_sql(self, sql: str) -> tuple[str, dict[str, DataFrame]]:
         """Turn ``db.table[$suffix]`` references into per-query relations:
         returns ``(template, frames)`` for ``spark.sql(template, **frames)``.
@@ -285,25 +224,27 @@ class Catalog:
         Without a lakehouse reference the text is returned untouched with
         no frames (``spark.sql`` formats only when given frames).
 
-        Each relation's manifest is pruned with the WHERE conjuncts
-        provably local to that table (tables/sqlextract.py; ≙
+        Spark's parser finds the references: the statement is parsed once
+        and its plan walked (tables/sqlextract.py; ≙
         SqlQueryProcessor.java:130-236, which extracts per-table
-        conditions before planning file lists).  Catalyst does all real
-        analysis; extraction only shrinks the file list (never re-applied
-        to rows — filter_rows=False), so a skipped or unparseable conjunct
-        costs pruning, not correctness.  Spark's ``TIMESTAMP/VERSION AS
-        OF`` spelling is normalized to the ``$suffix`` sugar first
-        (:meth:`_rewrite_as_of`).
+        conditions with JSqlParser before planning file lists).  A
+        reference is an unresolved relation, or a ``db.t.col``/``db.t.*``
+        qualifier, naming a lakehouse table; Spark's ``TIMESTAMP/VERSION
+        AS OF`` is read as the matching ``$suffix``.  Each relation's
+        manifest is pruned with the WHERE and inner-join ON conjuncts
+        provably local to that table.  Catalyst does all real analysis;
+        extraction only shrinks the file list (never re-applied to rows —
+        filter_rows=False), so a skipped or unparseable conjunct costs
+        pruning, not correctness.  A statement Spark cannot parse comes
+        back untouched, and ``spark.sql`` reports the error.
 
         Each base table's metadata is loaded once per call and feeds its
         schema, record count and every scan of it, so the whole query
         plans against one snapshot even while other handles commit."""
         from swiftlake_spark.dml.sqlfilter import parse_filter
         from swiftlake_spark.tables import expressions as E
-        from swiftlake_spark.tables.sqlextract import analyze, mask_literals
+        from swiftlake_spark.tables.sqlextract import analyze
 
-        sql = self._rewrite_as_of(sql)
-        masked = mask_literals(sql)
         exists_cache: dict[str, bool] = {}
 
         def _exists(base: str) -> bool:
@@ -313,15 +254,6 @@ class Catalog:
                 except Exception:
                     exists_cache[base] = False
             return exists_cache[base]
-
-        # literal masking replaces quoted content with 'xxx' (no dots),
-        # so refs can no longer match inside string literals
-        occs = [
-            m for m in self._REF_RE.finditer(masked)
-            if _exists(m.group(1).split("$")[0])
-        ]
-        if not occs:
-            return sql, {}
 
         metas: dict[str, TableMetadata] = {}
 
@@ -351,38 +283,28 @@ class Catalog:
             except Exception:
                 return None
 
-        infos: dict = {}
-        if self.sql_pruning:
-            try:
-                infos = analyze(sql, masked, _columns_of, _exists)
-            except Exception:  # noqa: BLE001 — extraction is best-effort
-                infos = {}
+        infos, quals = analyze(self.spark, sql, _columns_of, _exists)
+        if not infos and not quals:
+            return sql, {}
 
-        # an occurrence is a FROM table (analysis matched its span), a
-        # column qualifier (followed by ``.word``), or other.  Filters are
-        # only safe per-occurrence when EVERY occurrence of a ref is a
-        # FROM ref; with exactly one FROM ref the qualifiers denote that
-        # same instance and share its relation; any other mix falls back
-        # to one shared unpruned relation.  groups: (ref, info, occs).
-        by_ref: dict[str, dict[str, list]] = {}
-        for m in occs:
-            g = by_ref.setdefault(m.group(1), {"from": [], "qual": [], "other": []})
-            if m.span(1) in infos:
-                g["from"].append(m)
-            else:
-                nxt = masked[m.end(1):m.end(1) + 2]
-                if len(nxt) == 2 and nxt[0] == "." and (nxt[1].isalpha() or nxt[1] == "_"):
-                    g["qual"].append(m)
-                else:
-                    g["other"].append(m)
+        # Filters are only safe per relation when no table-name qualifier
+        # names the table; with exactly one relation the qualifiers denote
+        # that same instance and share its frame; several relations plus a
+        # qualifier fall back to one shared unpruned relation.
+        # groups: (ref, info, spans).
+        by_ref: dict[str, tuple[list, list]] = {}
+        for info in infos:
+            by_ref.setdefault(info.ref, ([], []))[0].append(info)
+        for ref, span in quals:
+            by_ref.setdefault(ref, ([], []))[1].append(span)
         groups: list[tuple[str, Any, list]] = []
-        for ref, g in by_ref.items():
-            if not g["qual"] and not g["other"]:
-                groups += [(ref, infos[m.span(1)], [m]) for m in g["from"]]
-            elif len(g["from"]) == 1 and not g["other"]:
-                groups.append((ref, infos[g["from"][0].span(1)], g["from"] + g["qual"]))
+        for ref, (rels, qs) in by_ref.items():
+            if not qs:
+                groups += [(ref, info, [info.span]) for info in rels]
+            elif len(rels) == 1:
+                groups.append((ref, rels[0], [rels[0].span, *qs]))
             else:
-                groups.append((ref, None, g["from"] + g["qual"] + g["other"]))
+                groups.append((ref, None, [i.span for i in rels] + qs))
 
         def _conjuncts(info) -> list[tuple[str, Any]]:
             """``info``'s parseable conjuncts as (text, expression)."""
@@ -418,7 +340,7 @@ class Catalog:
         # pruned by the OTHER side's distinct key set.  The keys are
         # collected from the other side's PRUNE-ONLY relation (a superset
         # of its true rows — sound) or, for plain Spark relations, the
-        # raw view; collection is bounded by join_filter_max_keys and
+        # raw view; collection is bounded by JOIN_FILTER_MAX_KEYS and
         # abandoned beyond it.  Like the base extraction this only
         # shrinks file lists; rows still come from the original SQL.  An
         # IN set only prunes files when the key's values are confined per
@@ -426,7 +348,7 @@ class Catalog:
         # leading sort column (narrow min/max) — so any other edge is
         # skipped from the metadata alone, before a Spark job is spent on
         # its keys.
-        cap = self.join_filter_max_keys
+        cap = JOIN_FILTER_MAX_KEYS
         records_cache: dict[str, int] = {}
 
         def _prunes_on(base: str, col: str) -> bool:
@@ -449,11 +371,10 @@ class Catalog:
 
         def _join_filters(info) -> list:
             out = []
-            for my_col, other_name, other_span, other_col in info.equi:
+            for my_col, other_name, oinfo, other_col in info.equi:
                 try:
                     if not _prunes_on(info.ref.split("$")[0], my_col):
                         continue
-                    oinfo = infos.get(other_span)
                     if oinfo is not None:
                         # an UNFILTERED lakehouse other side offers its
                         # full key domain — only worth collecting when the
@@ -487,22 +408,21 @@ class Catalog:
             return out
 
         frames: dict[str, DataFrame] = {}
-        names: dict[int, str] = {}
-        for ref, info, ms in groups:
-            extra = (_join_filters(info)
-                     if self.join_filter_pushdown and info is not None else ())
+        names: dict[tuple[int, int], str] = {}
+        for ref, info, spans in groups:
+            extra = _join_filters(info) if info is not None else ()
             name = f"t{len(frames)}"
             frames[name] = _frame(ref, info, extra)
-            names.update((id(m), name) for m in ms)
+            names.update((s, name) for s in spans)
 
         def _escape(text: str) -> str:
             return text.replace("{", "{{").replace("}", "}}")
 
         out, last = [], 0
-        for m in sorted(occs, key=lambda m: m.start(1)):
-            out.append(_escape(sql[last:m.start(1)]))
-            out.append("{" + names[id(m)] + "}")
-            last = m.end(1)
+        for (lo, hi), name in sorted(names.items()):
+            out.append(_escape(sql[last:lo]))
+            out.append("{" + name + "}")
+            last = hi
         out.append(_escape(sql[last:]))
         return "".join(out), frames
 

@@ -201,8 +201,8 @@ class FuzzGen:
             out = f"NOT ({out})"
         if self.rng.random() < 0.15:
             # CASE...END as a top-level conjunct, un-parenthesized ANDs
-            # between WHEN and THEN: the extraction's nesting tracker
-            # (r9 rewrite, tables/sqlextract.py _nesting) must never
+            # between WHEN and THEN: the extraction's AND split
+            # (tables/sqlextract.py, over Spark's parsed plan) must never
             # promote a branch condition to a standalone pruning
             # conjunct — a slip diverges from DuckDB here
             inner = (f"{self._cmp_pred(table, alias)} AND "

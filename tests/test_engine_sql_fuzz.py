@@ -3,11 +3,12 @@
 tests/test_sql_fuzz.py certifies the corpus over plain parquet views —
 it exercises Spark, not us.  This harness loads the same fixture data
 into PARTITIONED native tables, runs each shape via ``engine.sql`` (name
-resolution + WHERE-conjunct extraction + manifest pruning,
-tables/sqlextract.py), and compares against DuckDB running the original
-text over the raw parquet.  An unsound extraction — a conjunct
-attributed to the wrong table, a mis-parsed literal, an over-eager
-prune on a partition transform — shows up as a row diff here.
+resolution + WHERE-conjunct extraction from Spark's parsed plan +
+manifest pruning, tables/sqlextract.py), and compares against DuckDB
+running the original text over the raw parquet.  An unsound extraction
+— a conjunct attributed to the wrong table, a mis-parsed literal, an
+over-eager prune on a partition transform — shows up as a row diff
+here.
 
 The corpus-health check asserts pruning genuinely fired across the run:
 a fuzz where every scan reads every file would certify nothing about
