@@ -183,7 +183,9 @@ class _Parser:
         k, v = self.next()
         if k != "str":
             raise FilterParseError("LIKE needs a string literal")
-        if not v.endswith("%") or "%" in v[:-1] or "_" in v:
+        # ``\`` is LIKE's escape character (``'a\%'`` matches only
+        # ``a%``), so a pattern holding one is never a plain prefix
+        if not v.endswith("%") or "%" in v[:-1] or "_" in v or "\\" in v:
             raise FilterParseError(
                 "only LIKE 'prefix%' is supported in pushdown filters"
             )

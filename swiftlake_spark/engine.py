@@ -149,13 +149,16 @@ class SwiftLakeEngine:
         order.  Parameter markers survive transforms untouched unless a
         transformer rewrites them deliberately.
 
-        DML statements (INSERT / UPDATE / DELETE FROM / MERGE INTO)
-        whose target is a LAKEHOUSE table route to the corresponding
-        builders (dml/sqldml.py — beyond the reference's read-only SQL
-        surface) and return a one-row commit receipt ``(operation,
-        snapshot_id)``; DML against Spark-native relations passes
-        through to spark.sql untouched."""
+        Lakehouse CREATE / ALTER / DROP TABLE route from the text first
+        (sqldml.ddl_route).  Any other statement is parsed once by Spark's
+        parser (tables/sqlextract.py ``parse``): INSERT / UPDATE / DELETE
+        FROM / MERGE INTO on a LAKEHOUSE table route to the builders
+        (dml/sqldml.py — beyond the reference's read-only SQL surface)
+        and return a one-row commit receipt ``(operation, snapshot_id)``;
+        the rest has its tables resolved from the same parse and runs on
+        ``spark.sql``, which also reports statements Spark cannot parse."""
         from swiftlake_spark.dml import sqldml
+        from swiftlake_spark.tables import sqlextract
 
         for t in ([transform] if transform else []) + list(
             self.config.sql_transformers
@@ -167,34 +170,17 @@ class SwiftLakeEngine:
                 )
             sql = out
 
-        if self.warehouse is not None and sqldml.ddl_route(self, sql):
-            # CREATE TABLE / DROP TABLE on lakehouse tables (see
-            # ddl_route for the conservative routing evidence)
-            if args is not None:
-                from swiftlake_spark.tables.metadata import ValidationError
-
-                raise ValidationError(
-                    "parameter markers are not supported in DDL statements"
-                )
-            return sqldml.execute_dml(self, sql)
-        if self.warehouse is not None and sqldml.is_dml(sql):
-            # route to the lakehouse DML builders ONLY when the target is
-            # a lakehouse table — DML against Spark-native/temp relations
-            # must keep passing through to spark.sql unchanged
-            target = sqldml.dml_target(sql)
-            if target is not None and self.catalog.table_exists(target):
-                if args is not None:
-                    from swiftlake_spark.tables.metadata import ValidationError
-
-                    raise ValidationError(
-                        "parameter markers are not supported in DML statements"
-                    )
-                return sqldml.execute_dml(self, sql)
-        frames: dict = {}
-        if self.warehouse is not None:
-            # instantiate the catalog if needed — resolution must not
-            # depend on whether something touched engine.catalog first
-            sql, frames = self.catalog.resolve_sql(sql)
+        if self.warehouse is None:
+            return self.spark.sql(sql, args=args)
+        if sqldml.ddl_route(self, sql):
+            return sqldml.execute_ddl(self, sql, args)
+        root = sqlextract.parse(self.spark, sql)
+        if root is None:
+            return self.spark.sql(sql, args=args)
+        table = sqldml.dml_table(root)
+        if table is not None and self.catalog.table_exists(table):
+            return sqldml.execute_dml(self, sql, root, table, args)
+        sql, frames = self.catalog.resolve_sql(sql, root)
         return self.spark.sql(sql, args=args, **frames)
 
     def execute(

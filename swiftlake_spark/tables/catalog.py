@@ -214,7 +214,7 @@ class Catalog:
         return t.scan(filter, **kwargs)
 
     # -------------------------------------------------------------- sql
-    def resolve_sql(self, sql: str) -> tuple[str, dict[str, DataFrame]]:
+    def resolve_sql(self, sql: str, root=None) -> tuple[str, dict[str, DataFrame]]:
         """Turn ``db.table[$suffix]`` references into per-query relations:
         returns ``(template, frames)`` for ``spark.sql(template, **frames)``.
         Each reference becomes a ``{tN}`` placeholder naming a DataFrame in
@@ -225,7 +225,8 @@ class Catalog:
         no frames (``spark.sql`` formats only when given frames).
 
         Spark's parser finds the references: the statement is parsed once
-        and its plan walked (tables/sqlextract.py; ≙
+        (or ``root`` is that parse, as ``engine.sql`` passes it) and its
+        plan walked (tables/sqlextract.py; ≙
         SqlQueryProcessor.java:130-236, which extracts per-table
         conditions with JSqlParser before planning file lists).  A
         reference is an unresolved relation, or a ``db.t.col``/``db.t.*``
@@ -283,7 +284,7 @@ class Catalog:
             except Exception:
                 return None
 
-        infos, quals = analyze(self.spark, sql, _columns_of, _exists)
+        infos, quals = analyze(self.spark, sql, _columns_of, _exists, root)
         if not infos and not quals:
             return sql, {}
 

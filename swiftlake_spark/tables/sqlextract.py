@@ -10,27 +10,31 @@ between planning 40 files and planning 400,000.
 Reference parity: SqlQueryProcessor finds each table of a statement and
 its conditions with a real SQL parser, JSqlParser
 (sql/SqlQueryProcessor.java:130-236).  Here Spark's own parser does that
-job: :func:`analyze` parses the statement once (``sqlParser.parsePlan``)
-and walks the unresolved plan, so Spark's grammar decides what is a
-table, an alias, a CTE, a subquery or a conjunct.  This module only
-proves, conjunct by conjunct, that a predicate references exactly one
-FROM table, and hands that conjunct's original text to dml/sqlfilter's
-pushdown grammar.  The extracted expression is used for MANIFEST
-PRUNING ONLY (never re-applied as a row filter), so the worst possible
-outcome of skipping a conjunct is an unpruned scan, and the stats
-evaluation itself is the inclusive 3VL engine fuzzed in
-test_pruning_soundness.py.
+job, and it is the engine's only SQL parser: :func:`parse` runs
+``sqlParser.parsePlan`` once per statement, and ``engine.sql`` hands
+that one parse both to the DML route (dml/sqldml.py) and to
+:func:`analyze`, which walks the unresolved plan, so Spark's grammar
+decides what is a table, an alias, a CTE, a subquery or a conjunct.
+This module only proves, conjunct by conjunct, that a predicate
+references exactly one FROM table, and hands that conjunct's text
+(:func:`expr_text`: qualifiers stripped, string literals re-rendered
+from their parsed values) to dml/sqlfilter's pushdown grammar.  The
+extracted expression is used for MANIFEST PRUNING ONLY (never
+re-applied as a row filter), so the worst possible outcome of skipping
+a conjunct is an unpruned scan, and the stats evaluation itself is the
+inclusive 3VL engine fuzzed in test_pruning_soundness.py.
 
 The plan crosses py4j as one ``toJSON()`` string, which carries no
 source positions; ``origin()`` is read over py4j (about 0.5 ms a node)
-only where text is needed: lakehouse relations, candidate conjuncts and
-lakehouse-qualified names.
+only where text is needed: lakehouse relations, candidate conjuncts,
+their qualified columns and string literals, and lakehouse-qualified
+names.
 
 Conservative rules, each inclusive by construction:
 
-- a conjunct containing a subquery, a parameter marker, a backslash
-  escape, a column of unknown provenance, a qualifier that is not a
-  visible alias, or columns of two tables is skipped;
+- a conjunct containing a subquery, a parameter marker, a column of
+  unknown provenance, a qualifier that is not a visible alias, or
+  columns of two tables is skipped;
 - WHERE conditions and the ON conditions of inner joins split on AND;
   an OR stays one unit, so an OR spanning tables yields nothing;
 - a table on the null-extended side of an outer join never receives a
@@ -102,9 +106,10 @@ class _Node:
     py4j only when its origin is read."""
 
     __slots__ = ("d", "cls", "key", "parent", "kids", "fields", "_get",
-                 "_j", "_span")
+                 "_j", "_span", "_ins")
 
-    def __init__(self, d: dict, get, parent: "_Node | None", key: str | None):
+    def __init__(self, d: dict, get, parent: "_Node | None", key: str | None,
+                 ins: list[int]):
         self.d = d
         self.cls = d["class"].rsplit(".", 1)[-1]
         self.key = key                # field name when not a child
@@ -114,6 +119,7 @@ class _Node:
         self._get = get
         self._j = None
         self._span: tuple[int, int] | None = None
+        self._ins = ins               # parsed-text offsets of added backticks
 
     @property
     def j(self):
@@ -122,10 +128,11 @@ class _Node:
         return self._j
 
     def span(self) -> tuple[int, int]:
-        """Half-open origin of the node in the parsed text."""
+        """Half-open origin of the node in the statement's text."""
         if self._span is None:
             o = self.j.origin()
-            self._span = (o.startIndex().get(), o.stopIndex().get() + 1)
+            self._span = tuple(i - bisect.bisect_left(self._ins, i)
+                               for i in (o.startIndex().get(), o.stopIndex().get() + 1))
         return self._span
 
     def field(self, key: str) -> "_Node | None":
@@ -137,26 +144,30 @@ class _Node:
             yield from n.walk()
 
 
-def _field(n: _Node, key: str, k: int | None = None):
+def _field(n: _Node, key: str, *idx: int):
     v = getattr(n.j, key)()
     if v.getClass().getName() == "scala.Some":
         v = v.get()
-    return v if k is None else v.apply(k)
+    for k in idx:
+        v = v.apply(k)
+    return v
 
 
 def _is_tree(v) -> bool:
     return isinstance(v, list) and bool(v) and isinstance(v[0], dict) and "class" in v[0]
 
 
-def _build(flat: list, get, parent, key, is_plan: bool) -> _Node:
+def _build(flat: list, get, parent, key, is_plan: bool,
+           ins: list[int] | None = None) -> _Node:
     """Tree of a JSON pre-order node list.  A plan node's fields hold its
     expressions; an expression's only non-child tree is a subquery's
     ``plan`` (its other tree-valued fields repeat its children)."""
     pos = 0
+    ins = parent._ins if parent is not None else ins or []
 
     def node(get, parent, key) -> _Node:
         nonlocal pos
-        n = _Node(flat[pos], get, parent, key)
+        n = _Node(flat[pos], get, parent, key, ins)
         pos += 1
         n.kids = [node(lambda k=k: n.j.children().apply(k), n, None)
                   for k in range(n.d["num-children"])]
@@ -176,16 +187,22 @@ def _fields(n: _Node, is_plan: bool):
             yield _build(rel["_2"], lambda i=i: n.j.cteRelations().apply(i)._2(),
                          n, "cte", True)
     for key, v in n.d.items():
-        if _is_tree(v):
-            yield _build(v, partial(_field, n, key), n, key, key in _PLAN_FIELDS)
-        elif isinstance(v, list) and v and all(
-            isinstance(t, list) and _is_tree(t) for t in v
-        ):
-            for k, t in enumerate(v):
-                yield _build(t, partial(_field, n, key, k), n, key, False)
+        for idx, t in _trees(v):
+            yield _build(t, partial(_field, n, key, *idx), n, key,
+                         not idx and key in _PLAN_FIELDS)
 
 
-def _parts(s: str) -> list[str]:
+def _trees(v, idx: tuple[int, ...] = ()):
+    """(index path, tree) of each tree in a JSON field value, however
+    deep its lists nest (an inline table's rows are lists of lists)."""
+    if _is_tree(v):
+        yield idx, v
+    elif isinstance(v, list):
+        for k, t in enumerate(v):
+            yield from _trees(t, idx + (k,))
+
+
+def name_parts(s: str) -> list[str]:
     """A JSON-rendered ``Seq[String]`` (``"[db, t]"``) as a list."""
     return s[1:-1].split(", ")
 
@@ -194,12 +211,6 @@ def _join_type(n: _Node) -> str:
     jt = n.d["joinType"]
     jt = jt.get("tpe", jt)  # NATURAL / USING wrap the real join type
     return (jt.get("object") or jt["product-class"]).rsplit(".", 1)[-1].rstrip("$")
-
-
-def _split_and(n: _Node) -> list[_Node]:
-    if n.cls == "And":
-        return _split_and(n.kids[0]) + _split_and(n.kids[1])
-    return [n]
 
 
 def _tail_start(text: str, part: str) -> int:
@@ -229,18 +240,10 @@ def _as_of(n: _Node, name: str) -> str:
     )
 
 
-def analyze(
-    spark,
-    sql: str,
-    columns_of: Callable[[str], "set[str] | None"],
-    is_lakehouse: Callable[[str], bool],
-) -> tuple[list[FromInfo], list[tuple[str, tuple[int, int]]]]:
-    """Parse ``sql`` with Spark's parser and return ``(infos, quals)``:
-    one :class:`FromInfo` per lakehouse relation, with its provable
-    single-table conjuncts (qualifier-stripped, original literal text),
-    and the ``(ref, span)`` of every lakehouse table-name qualifier
-    (``db.t.col``, ``db.t.*``).  Spans index ``sql``.  A statement Spark
-    cannot parse yields nothing, and ``spark.sql`` reports the error."""
+def parse(spark, sql: str) -> _Node | None:
+    """Spark's parse of ``sql`` as a node tree, or None when Spark cannot
+    parse it.  ``db.t$suffix`` is backtick-quoted before parsing
+    (``db.`t$snapshot_3```) and every span indexes ``sql`` itself."""
     inserted: list[int] = []  # parsed-text offsets of added backticks
 
     def quote(m: re.Match) -> str:
@@ -252,12 +255,74 @@ def analyze(
     try:
         jplan = spark._jsparkSession.sessionState().sqlParser().parsePlan(text)
     except ParseException:
-        return [], []
-    root = _build(json.loads(jplan.toJSON()), lambda: jplan, None, None, True)
-    nodes = list(root.walk())
+        return None
+    return _build(json.loads(jplan.toJSON()), lambda: jplan, None, None, True,
+                  inserted)
 
-    def span(n: _Node) -> tuple[int, int]:
-        return tuple(i - bisect.bisect_left(inserted, i) for i in n.span())
+
+def quote_ident(parts: list[str]) -> str:
+    """A dotted name, each part backtick-quoted unless a plain word."""
+    return ".".join(p if re.fullmatch(r"[A-Za-z_]\w*", p)
+                    else "`" + p.replace("`", "``") + "`" for p in parts)
+
+
+def expr_text(sql: str, n: _Node,
+              attr: Callable[[list[str]], "str | None"] = lambda parts: None,
+              strings: bool = False) -> str:
+    """The original text of expression ``n``, each column reference
+    replaced by ``attr(nameParts)`` unless that is None.  ``strings``
+    re-renders each string literal from its parsed value as ``'…'``, for
+    the pushdown grammar, which reads literals verbatim where Spark has
+    unescaped ``'A\\tB'``; text that Spark parses again keeps them."""
+    edits = []
+    for x in n.walk():
+        if x.cls == "UnresolvedAttribute":
+            new = attr(name_parts(x.d["nameParts"]))
+        elif (strings and x.cls == "Literal" and x.d["dataType"] == "string"
+              and x.d.get("value") is not None):
+            new = "'" + x.d["value"].replace("'", "''") + "'"
+        else:
+            continue
+        if new is not None:
+            edits.append((x.span(), new))
+    # IN, BETWEEN, LIKE and IS [NOT] NULL nodes (and the NOT around a
+    # negated one) start at their keyword: widen to the leftmost operand
+    out, (pos, end), x = [], n.span(), n
+    while x.kids and x.kids[0].span()[0] <= pos:
+        x = x.kids[0]
+        pos = x.span()[0]
+    for (lo, hi), new in sorted(edits):
+        out += [sql[pos:lo], new]
+        pos = hi
+    out.append(sql[pos:end])
+    return "".join(out)
+
+
+def split_and(n: _Node) -> list[_Node]:
+    if n.cls == "And":
+        return split_and(n.kids[0]) + split_and(n.kids[1])
+    return [n]
+
+
+def analyze(
+    spark,
+    sql: str,
+    columns_of: Callable[[str], "set[str] | None"],
+    is_lakehouse: Callable[[str], bool],
+    root: _Node | None = None,
+) -> tuple[list[FromInfo], list[tuple[str, tuple[int, int]]]]:
+    """Walk ``root``, the :func:`parse` of ``sql`` (parsed here when not
+    given), and return ``(infos, quals)``: one :class:`FromInfo` per
+    lakehouse relation, with its provable single-table conjuncts
+    (qualifier-stripped, string literals re-rendered), and the
+    ``(ref, span)`` of every lakehouse table-name qualifier (``db.t.col``,
+    ``db.t.*``).  Spans index ``sql``.  A statement Spark cannot parse
+    yields nothing, and ``spark.sql`` reports the error."""
+    if root is None:
+        root = parse(spark, sql)
+        if root is None:
+            return [], []
+    nodes = list(root.walk())
 
     ctes = {
         rel["_1"].lower()
@@ -271,16 +336,16 @@ def analyze(
     for n in nodes:
         if n.cls != "UnresolvedRelation":
             continue
-        parts = _parts(n.d["multipartIdentifier"])
+        parts = name_parts(n.d["multipartIdentifier"])
         name = ".".join(parts)
         if len(parts) != 2 or not is_lakehouse(name.split("$")[0]):
             continue
-        top, (lo, hi), ref = n, span(n), name
+        top, (lo, hi), ref = n, n.span(), name
         if n.parent is not None and n.parent.cls == "RelationTimeTravel":
             # the time-travel node's origin is only its AS OF clause
             top = n.parent
             ref += _as_of(top, name)
-            hi = span(top)[1]
+            hi = top.span()[1]
         up = top.parent
         aliased = up is not None and up.cls == "SubqueryAlias"
         infos[id(n)] = FromInfo(ref, (lo, hi),
@@ -291,15 +356,15 @@ def analyze(
     quals: list[tuple[str, tuple[int, int]]] = []
     for n in nodes:
         if n.cls == "UnresolvedAttribute":
-            parts = _parts(n.d["nameParts"])
+            parts = name_parts(n.d["nameParts"])
         elif n.cls == "UnresolvedStar" and "target" in n.d:
-            parts = _parts(n.d["target"]) + ["*"]
+            parts = name_parts(n.d["target"]) + ["*"]
         else:
             continue
         name = ".".join(parts[:2])
         if len(parts) < 3 or not is_lakehouse(name.split("$")[0]):
             continue
-        lo, hi = span(n)
+        lo, hi = n.span()
         q = sql[lo:hi]
         for p in reversed(parts[2:]):
             q = q[:_tail_start(q, p)].rstrip().removesuffix(".").rstrip()
@@ -338,7 +403,7 @@ def analyze(
             n = n.field("relation") or n
         name = info = None
         if n.cls == "UnresolvedRelation":
-            name = ".".join(_parts(n.d["multipartIdentifier"]))
+            name = ".".join(name_parts(n.d["multipartIdentifier"]))
             info = infos.get(id(n))
             if "." not in name and name.lower() in ctes:
                 # a CTE, not whatever catalog relation shares its name:
@@ -360,35 +425,11 @@ def analyze(
             ]
         return cands[0] if len(cands) == 1 else None
 
-    def start(n: _Node) -> int:
-        # IN, BETWEEN, LIKE and IS [NOT] NULL nodes (and the NOT around a
-        # negated one) start at their keyword: widen to the leftmost
-        # operand.  A first child starting after ``lo`` sits under an
-        # origin that already covers the text's start.
-        lo = span(n)[0]
-        while n.kids:
-            n = n.kids[0]
-            s = span(n)[0]
-            if s > lo:
-                break
-            lo = s
-        return lo
-
-    def conjunct_text(conj: _Node, attrs: list[_Node]) -> str:
-        out, pos = [], start(conj)
-        for a in sorted((a for a in attrs if len(_parts(a.d["nameParts"])) > 1),
-                        key=lambda a: a.span()):
-            lo, hi = span(a)
-            out.append(sql[pos:lo])
-            pos = lo + _tail_start(sql[lo:hi], _parts(a.d["nameParts"])[-1])
-        out.append(sql[pos:span(conj)[1]])
-        return "".join(out)
-
     def edge(conj: _Node, scope: list[_Item]) -> None:
         if conj.cls != "EqualTo" or any(k.cls != "UnresolvedAttribute"
                                         for k in conj.kids):
             return
-        pa, pb = (_parts(k.d["nameParts"]) for k in conj.kids)
+        pa, pb = (name_parts(k.d["nameParts"]) for k in conj.kids)
         a, b = resolve(pa, scope), resolve(pb, scope)
         if a is not None and b is not None and a is not b:
             for me, mine, other, theirs in ((a, pa, b, pb), (b, pb, a, pa)):
@@ -411,22 +452,21 @@ def analyze(
         for cond, scope in pools:
             if cond is None:
                 continue  # no ON, or a condition read as a plan field
-            for conj in _split_and(cond):
+            for conj in split_and(cond):
                 sub = list(conj.walk())
                 if any(x.fields or x.cls in ("NamedParameter", "PosParameter")
                        for x in sub):
                     continue  # subquery or parameter marker
                 attrs = [x for x in sub if x.cls == "UnresolvedAttribute"]
-                owners = [resolve(_parts(a.d["nameParts"]), scope) for a in attrs]
+                owners = [resolve(name_parts(a.d["nameParts"]), scope) for a in attrs]
                 tgt = owners[0] if owners else None
                 if tgt is not None and all(o is tgt for o in owners):
                     if tgt.info is None or tgt.null_ext:
                         continue
-                    text = conjunct_text(conj, attrs)
-                    # Spark unescapes backslashes in string literals; the
-                    # pushdown grammar would read them verbatim
-                    if "\\" not in text:
-                        tgt.info.conjuncts.append(text)
+                    tgt.info.conjuncts.append(expr_text(
+                        sql, conj,
+                        lambda p: quote_ident(p[-1:]) if len(p) > 1 else None,
+                        strings=True))
                 elif not has_outer:
                     edge(conj, scope)
 

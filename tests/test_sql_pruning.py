@@ -484,14 +484,27 @@ class TestResolveSqlPruning:
         got = sorted(r.o_orderkey for r in eng.sql(q).collect())
         assert got == [i for i in range(100) if i not in (3, 13)]
 
-    def test_backslash_escape_literal_never_prunes(self, eng, spark):
-        """Spark unescapes ``\\t`` in a string literal; the pushdown
-        grammar reads it verbatim, so the conjunct must not prune."""
+    def test_backslash_escape_literal_prunes_by_its_value(self, eng, spark):
+        """Spark unescapes ``\\t`` in a string literal; the conjunct
+        reaches the pushdown grammar with the unescaped value, so it
+        prunes to the partition holding that value."""
         eng.catalog.create_table("db.esc", "id BIGINT, s STRING",
                                  partition_spec=["s"])
         eng.insert_into("db.esc").dataframe(spark.createDataFrame(
             [(1, "A\tB"), (2, "C")], "id BIGINT, s STRING")).execute()
+        seen = self._scans(eng)
         q = "SELECT id FROM db.esc WHERE s = 'A\\tB'"
+        assert [r.id for r in eng.sql(q).collect()] == [1]
+        assert seen and seen[-1].pruned_files > 0
+
+    def test_like_escape_pattern_is_not_a_prefix(self, eng, spark):
+        """``\\`` escapes LIKE's wildcards: ``'a\\%'`` matches only
+        ``a%``, so the conjunct is no prefix and prunes nothing away."""
+        eng.catalog.create_table("db.lk", "id BIGINT, s STRING",
+                                 partition_spec=["s"])
+        eng.insert_into("db.lk").dataframe(spark.createDataFrame(
+            [(1, "a%"), (2, "a\\x")], "id BIGINT, s STRING")).execute()
+        q = "SELECT id FROM db.lk WHERE s LIKE 'a\\%'"
         assert [r.id for r in eng.sql(q).collect()] == [1]
 
     def test_sql_leaves_no_temp_views(self, eng, spark):

@@ -187,12 +187,14 @@ def test_sql_merge_rejects_unsupported_on(engine, spark):
         )
 
 
-def test_sql_dml_rejects_params_and_comments(engine, spark):
+def test_sql_dml_rejects_params_and_commented_out_predicate_stays_dead(engine, spark):
     seed(engine, spark)
     with pytest.raises(ValidationError, match="parameter markers"):
         engine.sql("UPDATE db.m SET qty = 0 WHERE id = :id", args={"id": 1})
-    with pytest.raises(ValidationError, match="tokenize"):
-        engine.sql("DELETE FROM db.m WHERE id = 1 -- comment")
+    # Spark's lexer drops the comment: the commented-out OR never joins
+    # the condition
+    engine.sql("DELETE FROM db.m WHERE id = 2 -- OR id = 1")
+    assert rows(engine.catalog.load("db.m"), "id") == [(1,), (3,), (4,)]
 
 
 def test_sql_select_still_works_and_literal_keyword_safe(engine, spark):
@@ -484,15 +486,20 @@ def test_sql_merge_by_source_rejects_source_refs(engine, spark):
 
 
 def test_sql_merge_by_source_requires_not(engine, spark):
+    from pyspark.errors import ParseException
+
     seed(engine, spark)
     spark.createDataFrame([(1, "A", 0, 0.0)], DDL).createOrReplaceTempView("s3")
-    with pytest.raises(ValidationError, match="BY SOURCE"):
+    before = rows(engine.catalog.load("db.m"))
+    # Spark's grammar has no WHEN MATCHED BY SOURCE: a syntax error at BY
+    with pytest.raises(ParseException, match="PARSE_SYNTAX_ERROR"):
         engine.sql(
             """
             MERGE INTO db.m t USING s3 s ON t.id = s.id
             WHEN MATCHED BY SOURCE THEN DELETE
             """
         )
+    assert rows(engine.catalog.load("db.m")) == before
 
 
 def test_sql_merge_null_rejecting_equals(engine, spark):
@@ -690,11 +697,15 @@ def test_sql_merge_by_target_synonym(engine, spark):
         "WHEN NOT MATCHED BY TARGET THEN INSERT *"
     )
     assert rows(engine.catalog.load("db.m"), "id", "qty") == [(1, 99), (5, 50)]
-    with pytest.raises(ValidationError, match="BY TARGET"):
+    from pyspark.errors import ParseException
+
+    # BY TARGET only follows NOT MATCHED: a syntax error at BY
+    with pytest.raises(ParseException, match="PARSE_SYNTAX_ERROR"):
         engine.sql(
             "MERGE INTO db.m t USING db.srct s ON t.id = s.id "
             "WHEN MATCHED BY TARGET THEN DELETE"
         )
+    assert rows(engine.catalog.load("db.m"), "id", "qty") == [(1, 99), (5, 50)]
 
 
 def test_sql_merge_boundary_scopes_by_source_known_delta(engine, spark):
@@ -752,3 +763,95 @@ def test_sql_merge_top_level_or_rejected(engine, spark):
     )
     assert rows(engine.catalog.load("db.m"), "id", "qty") == [
         (1, 99), (2, 20), (3, 30), (4, 40)]
+
+
+# -- the grammar is Spark's parser ------------------------------------------
+
+
+def test_sql_backslash_escape_literal_matches_its_value(engine, spark):
+    """Spark unescapes ``'A\\tB'`` to A<tab>B; the condition handed to
+    the pushdown grammar carries that value, not the escape text."""
+    engine.catalog.create_table("db.m", "id BIGINT, s STRING, qty BIGINT")
+    engine.insert_into("db.m").dataframe(spark.createDataFrame(
+        [(1, "A\tB", 10), (2, "C", 20)], "id BIGINT, s STRING, qty BIGINT"
+    )).execute()
+    engine.sql("UPDATE db.m SET qty = 0 WHERE s = 'A\\tB'")
+    assert rows(engine.catalog.load("db.m"), "id", "qty") == [(1, 0), (2, 20)]
+    engine.sql("DELETE FROM db.m WHERE s = 'A\\tB'")
+    assert rows(engine.catalog.load("db.m"), "id") == [(2,)]
+
+
+@pytest.mark.parametrize("stmt, want", [
+    ("DELETE FROM db.m WHERE id = 2 /* OR id = 1 */",
+     [(1, 10), (3, 30), (4, 40)]),
+    ("UPDATE `db`.`m` SET `qty` = 0 WHERE id = 2",
+     [(1, 10), (2, 0), (3, 30), (4, 40)]),
+    ("UPDATE db.m AS x SET qty = 0 WHERE x.id = 2",
+     [(1, 10), (2, 0), (3, 30), (4, 40)]),
+    ("MERGE INTO db.m t USING mrg_src s ON t.id = s.id -- keys\n"
+     "WHEN MATCHED THEN UPDATE SET qty = s.qty -- overwrite\n"
+     "-- new ids\n"
+     "WHEN NOT MATCHED THEN INSERT *",
+     [(1, 10), (2, 99), (3, 30), (4, 40), (9, 5)]),
+], ids=["block-comment", "backticks", "update-alias", "merge-comments"])
+def test_sql_dml_spark_grammar_forms(engine, spark, stmt, want):
+    seed(engine, spark)
+    spark.createDataFrame(
+        [(2, "A", 99, 9.9), (9, "C", 5, 0.5)], DDL
+    ).createOrReplaceTempView("mrg_src")
+    assert engine.sql(stmt).collect()[0].snapshot_id is not None
+    assert rows(engine.catalog.load("db.m"), "id", "qty") == want
+
+
+@pytest.mark.parametrize("stmt, match", [
+    ("INSERT OVERWRITE db.m SELECT * FROM db.m WHERE id = 1",
+     r"engine\.insert_overwrite"),
+    ("INSERT INTO db.m PARTITION (cat = 'A') SELECT 9, 9, 9.0",
+     r"engine\.insert_overwrite"),
+    ("INSERT INTO db.m BY NAME SELECT 9 AS id", r"engine\.insert_into"),
+    ("INSERT INTO db.m REPLACE WHERE id = 1 SELECT * FROM db.m",
+     r"engine\.insert_overwrite"),
+    ("MERGE INTO db.m t USING db.m s ON t.id = s.id "
+     "WHEN MATCHED THEN UPDATE SET *", r"UPDATE SET \*"),
+    ("MERGE WITH SCHEMA EVOLUTION INTO db.m t USING db.m s ON t.id = s.id "
+     "WHEN MATCHED THEN DELETE", r"engine\.merge_into"),
+    # a marker in an inline VALUES row, without args, is found too
+    ("INSERT INTO db.m VALUES (:p, 'A', 1, 1.0)", "parameter markers"),
+    ("INSERT INTO db.m VALUES (9, 'A', 1, 1.0), (?, 'B', 2, 2.0)",
+     "parameter markers"),
+], ids=["overwrite", "partition", "by-name", "replace-where", "update-star",
+        "schema-evolution", "values-named-marker", "values-positional-marker"])
+def test_sql_dml_forms_the_builders_own_are_rejected(engine, spark, stmt, match):
+    seed(engine, spark)
+    before = rows(engine.catalog.load("db.m"))
+    with pytest.raises(ValidationError, match=match):
+        engine.sql(stmt)
+    assert rows(engine.catalog.load("db.m")) == before
+
+
+def test_sql_dml_like_escape_is_not_a_prefix(engine, spark):
+    """``\\`` escapes LIKE's wildcards, so ``'a\\%'`` matches only ``a%``:
+    the pushdown grammar refuses it rather than read it as the prefix
+    ``a\\``, and no row changes."""
+    seed(engine, spark, data=[(1, "a%", 10, 1.0), (2, "a\\x", 20, 2.0)])
+    with pytest.raises(ValueError, match="prefix%"):
+        engine.sql("DELETE FROM db.m WHERE cat LIKE 'a\\%'")
+    assert rows(engine.catalog.load("db.m"), "id") == [(1,), (2,)]
+
+
+@pytest.mark.parametrize("stmt", [
+    "SELECT count(*) FROM db.m WHERE cat = 'A'",
+    "UPDATE db.m SET qty = 0 WHERE id = 2",
+    "DELETE FROM db.m WHERE id = 2",
+])
+def test_sql_parses_each_statement_once(engine, spark, monkeypatch, stmt):
+    """Routing and table resolution share one parse of the statement."""
+    from swiftlake_spark.tables import sqlextract
+
+    seed(engine, spark)
+    calls = []
+    real = sqlextract.parse
+    monkeypatch.setattr(sqlextract, "parse",
+                        lambda *a: calls.append(a[1]) or real(*a))
+    engine.sql(stmt).collect()
+    assert calls == [stmt]
