@@ -4,8 +4,10 @@ The driver certifies only the first 50 names of ``queries()`` per round,
 so the committed ``_GATE_PRIORITY`` must rotate staleness-first.  Through
 round 10 the order was hand-built; these tests pin it to the generator in
 ``scripts/gen_gate_priority.py`` so a hand edit (or a forgotten rotation)
-that would let any registry entry exceed 3 rounds of staleness fails in
-CI rather than in the judge's cross-round union.
+that would let a registry entry exceed its staleness bound (3 rounds,
+tier 2: 4) fails in CI rather than in the judge's cross-round union.
+Only an over-full staleness cohort, left by history, may push names
+past the bound, and only as far as the 50-slot window width forces.
 """
 
 from __future__ import annotations
@@ -61,16 +63,27 @@ def test_committed_window_matches_generator(state):
 
 def test_boundary_block_heads_window(state):
     """Every query at the (tier-adjusted) staleness boundary is inside
-    the driver window.
+    the driver window — or, when the boundary cohort is larger than the
+    window, the window holds only boundary names and the overflow heads
+    the next regenerated window.
+
+    No ordering fits more than ``WINDOW`` names into ``WINDOW`` slots, so
+    an over-full cohort is checked the way the generator's rule 1 splits
+    it: the committed window is marked certified one round later, the
+    order is regenerated, and every overflow name must be inside that
+    next window.  A cohort that fits is held to the
+    strict rule: all of it inside the window.
 
     Like the generator-match test, the boundary may be computed against
     the full union or the union excluding the newest round (rotation
     pending at handoff) — one generation of lag is legal, more is not.
     """
     names, certified = state
-    window = set(list(_GATE_PRIORITY)[:WINDOW])
+    committed = list(_GATE_PRIORITY)[:WINDOW]
 
-    def missing_for(cert):
+    def missing_for(cert, order):
+        """(boundary round, names the window ``order`` places wrongly)."""
+        window = set(order)
         known = [n for n in names if n in cert]
 
         def eff(n):
@@ -78,25 +91,35 @@ def test_boundary_block_heads_window(state):
 
         boundary_round = min(eff(n) for n in known)
         boundary = {n for n in known if eff(n) == boundary_round}
-        return boundary_round, boundary - window
+        if len(boundary) <= WINDOW:
+            return boundary_round, boundary - window
+        # over-full cohort: no query outside the boundary takes a slot, and
+        # the overflow heads the window regenerated after this one lands
+        top = max(r for r, _ in cert.values())
+        after = dict(cert)
+        after.update({n: (top + 1, slot) for slot, n in enumerate(order)})
+        head = set(generate(names, after, _GATE_TIER2)[:WINDOW])
+        return boundary_round, (window - boundary) | (boundary - window - head)
 
-    boundary_round, missing = missing_for(certified)
+    boundary_round, missing = missing_for(certified, committed)
     if missing:
         # One generation of lag is legal ONLY if (a) the previous union's
-        # boundary is satisfied AND (b) regeneration would put every
-        # violating name inside the next window — i.e. the lag is exactly
+        # boundary is satisfied AND (b) regeneration would place every
+        # violating name as the boundary rule asks — i.e. the lag is exactly
         # one generation, not a policy hole (ADVICE r12: the prev-union
         # check alone accepted windows that never catch up).
-        _, missing_prev = missing_for(certified_rounds(exclude_newest=True))
-        assert not missing_prev, (
-            f"stale-boundary queries (effective r{boundary_round}) outside "
-            f"the 50-slot window: {sorted(missing)}"
+        _, missing_prev = missing_for(
+            certified_rounds(exclude_newest=True), committed
         )
-        regen = set(generate(names, certified, _GATE_TIER2)[:WINDOW])
-        uncaught = missing - regen
+        assert not missing_prev, (
+            f"the 50-slot window misplaces the staleness boundary "
+            f"(effective r{boundary_round}): {sorted(missing)}"
+        )
+        regen = generate(names, certified, _GATE_TIER2)[:WINDOW]
+        uncaught = missing & missing_for(certified, regen)[1]
         assert not uncaught, (
-            f"stale-boundary queries outside the committed window that "
-            f"regeneration would NOT catch either: {sorted(uncaught)} — "
+            f"the committed window misplaces {sorted(uncaught)} and "
+            f"regeneration would misplace them too — "
             "the rotation policy itself is broken, not just lagging"
         )
 
@@ -188,7 +211,8 @@ def test_tier2_names_are_registered(state):
 
 def test_rotation_policy_converges(state):
     """Simulate 8 future rounds under the generator: tier-1 staleness
-    stays <= 3 and tier-2 <= 4.
+    stays <= 3 and tier-2 <= 4, except where the starting union makes
+    that impossible — and then no query is late beyond what it forces.
 
     Each simulated round certifies the first 50 names of the generated
     order, then the order is regenerated from the updated union — the
@@ -196,20 +220,35 @@ def test_rotation_policy_converges(state):
     a hole (e.g. never-certified names starving a stale block, or the
     tier-2 deferral starving tier 1), this catches it before the driver
     does.
+
+    Pigeonhole bound: by round t every query whose
+    starting certification is past its bound needs one of the
+    ``WINDOW * (t - current)`` slots simulated so far, so at least
+    ``forced(t)`` of them are late under ANY order.  The policy may not
+    do worse; where no cohort overflows, ``forced`` is 0 and every query
+    stays within its bound.
     """
     names, certified = state
     last = {n: certified[n][0] for n in names if n in certified}
     pos = {n: certified[n][1] if n in certified else i for i, n in enumerate(names)}
     current = max(last.values(), default=0)
+    start = dict(last)
+
+    def bound(n):
+        return 4 if n in _GATE_TIER2 else 3
+
     for rnd in range(current + 1, current + 9):
         cert_view = {n: (r, pos[n]) for n, r in last.items()}
         order = generate(names, cert_view, _GATE_TIER2)
         for slot, n in enumerate(order[:WINDOW]):
             last[n] = rnd
             pos[n] = slot
-        for n, r in last.items():
-            bound = 4 if n in _GATE_TIER2 else 3
-            assert rnd - r <= bound, (
-                f"round {rnd}: {n} staleness {rnd - r} > {bound}"
-            )
+        due = sum(1 for n, r in start.items() if rnd - r > bound(n))
+        forced = max(0, due - WINDOW * (rnd - current))
+        over = sorted(n for n, r in last.items() if rnd - r > bound(n))
+        assert len(over) <= forced, (
+            f"round {rnd}: {len(over)} queries past their staleness bound, "
+            f"{forced} forced by the window width: "
+            + ", ".join(f"{n} ({rnd - last[n]} > {bound(n)})" for n in over)
+        )
     assert len(last) == len(names), "some registry entry never entered the window"
