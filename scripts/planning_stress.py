@@ -3,27 +3,30 @@
 
 The fuzz matrix certifies inline-SQL pruning SOUNDNESS on tables of a
 few dozen files; this script measures planning COST — manifest scans,
-distinct-key collection jobs, view registration — as the file count
+distinct-key collection jobs, relation builds — as the file count
 grows 10x, because at 100 TB the manifest is the hot metadata path:
 a planner that re-lists or re-scans per query turns O(files) planning
 into the bottleneck long before execution does.
 
 Builds the same partitioned shape at ~200 and ~2,000 files (bucket
-transform x category partition), then times, per query shape:
+transform x category partition; ``8 100`` gives 200 and 2,500), then
+times, per query shape:
 
-- t_plan  — the ``eng.sql(...)`` call itself: WHERE extraction,
-  manifest prune, join-filter key collection, temp-view registration
-  (everything that happens BEFORE Spark sees the query);
+- t_plan  — the ``eng.sql(...)`` call itself: statement parse, manifest
+  prune, join-filter key collection, the scan relation (everything that
+  happens BEFORE Spark runs the query), warm: each shape runs once
+  before it is timed;
 - t_exec  — one noop-sink execution of the returned frame;
 - scanned/pruned file counts from ScanMetrics (planning_ms included).
 
-Usage:  python scripts/planning_stress.py [files_small] [files_big]
+Usage:  python scripts/planning_stress.py [buckets_small] [buckets_big]
 Prints a markdown table for PERF.md.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -52,16 +55,22 @@ def build_table(eng, spark, name: str, buckets: int, inserts: int):
 def main() -> int:
     from swiftlake_spark.config import EngineConfig
     from swiftlake_spark.engine import SwiftLakeEngine
-    from swiftlake_spark.plans.metrics import ScanMetrics
     from swiftlake_spark.session import build_session
 
     buckets_small = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     buckets_big = int(sys.argv[2]) if len(sys.argv) > 2 else 80
 
-    spark = build_session(EngineConfig(app_name="planning-stress", cpus=8,
-                                       shuffle_partitions=8))
-    eng = SwiftLakeEngine(
-        spark, warehouse=tempfile.mkdtemp(prefix="planstress_"))
+    spark = build_session(EngineConfig(app_name="planning-stress"))
+    warehouse = tempfile.mkdtemp(prefix="planstress_")
+    try:
+        return run(spark, SwiftLakeEngine(spark, warehouse=warehouse),
+                   buckets_small, buckets_big)
+    finally:
+        shutil.rmtree(warehouse, ignore_errors=True)
+
+
+def run(spark, eng, buckets_small: int, buckets_big: int) -> int:
+    from swiftlake_spark.plans.metrics import ScanMetrics
 
     # small dim for the join-filter pushdown shape
     dim_schema = "k BIGINT, tag STRING"

@@ -59,17 +59,22 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     Cloudpickled UDF closures reference module-level functions by import
     path; when the driving process runs from a different cwd the workers
     can't import the package.  Shipping a zip via ``addPyFile`` puts it on
-    every worker's sys.path regardless of cwd."""
+    every worker's sys.path regardless of cwd.  Spark's file server may
+    serve the zip for as long as the process lives, so its directory is
+    removed at interpreter exit, not before."""
     key = id(spark.sparkContext)
     if key in _WORKER_IMPORTS_ADDED:
         return
+    import atexit
     import shutil
     import tempfile
 
     import swiftlake_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(swiftlake_spark.__file__))
-    zip_base = os.path.join(tempfile.mkdtemp(prefix="swl_pkg_"), "swiftlake_spark_pkg")
+    tmp = tempfile.mkdtemp(prefix="swl_pkg_")
+    atexit.register(shutil.rmtree, tmp, True)
+    zip_base = os.path.join(tmp, "swiftlake_spark_pkg")
     path = shutil.make_archive(
         zip_base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="swiftlake_spark"
     )

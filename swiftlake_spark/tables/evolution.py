@@ -27,6 +27,7 @@ itself.
 
 from __future__ import annotations
 
+import functools
 import re
 
 from typing import Any, Callable, Iterator
@@ -44,6 +45,10 @@ WIDENINGS = {
     ("smallint", "int"), ("smallint", "bigint"),
     ("int", "bigint"), ("float", "double"),
 }
+
+# file-group read plans kept process-wide; keyed by the declared schema
+# and field IDs, so a schema change is a new key
+READ_PLAN_CACHE_CAP = 64
 
 # --------------------------------------------------------------- walking
 
@@ -308,20 +313,37 @@ def plan_file_group(
     (see ``FileTypesNeeded``).  Sub-splits the group per distinct physical
     schema so pre/post-widen files each get a correctly-typed carrier.
     Returns ``[(read_schema, select_cols, subgroup_paths)]``."""
+    plan = _typeless_read_plan(
+        schema, tuple(sorted(field_ids.items())), tuple(sorted(file_ids.items())))
+    if plan is not None:
+        return [(plan[0], list(plan[1]), list(paths))]
+    by_types: dict[tuple, tuple[dict, list[str]]] = {}
+    for p in paths:
+        ft = parquet_file_types(p)
+        tk = tuple(sorted((k, v.simpleString()) for k, v in ft.items()))
+        by_types.setdefault(tk, (ft, []))[1].append(p)
+    out = []
+    for ft, fpaths in by_types.values():
+        rs, sc = build_read_plan(schema, field_ids, file_ids, ft)
+        out.append((rs, sc, fpaths))
+    return out
+
+
+@functools.lru_cache(maxsize=READ_PLAN_CACHE_CAP)
+def _typeless_read_plan(
+    schema: T.StructType,
+    field_ids: tuple[tuple[str, int], ...],
+    file_ids: tuple[tuple[str, int], ...],
+) -> tuple[T.StructType, tuple[Column, ...]] | None:
+    """``build_read_plan`` without footer types, or None when the group
+    needs them.  Built once per (schema, field IDs, file stamp): the
+    projection costs a few py4j calls per column, and its unresolved
+    Columns serve any number of scans."""
     try:
-        rs, sc = build_read_plan(schema, field_ids, file_ids)
-        return [(rs, sc, list(paths))]
+        rs, sc = build_read_plan(schema, dict(field_ids), dict(file_ids))
     except FileTypesNeeded:
-        by_types: dict[tuple, tuple[dict, list[str]]] = {}
-        for p in paths:
-            ft = parquet_file_types(p)
-            tk = tuple(sorted((k, v.simpleString()) for k, v in ft.items()))
-            by_types.setdefault(tk, (ft, []))[1].append(p)
-        out = []
-        for ft, fpaths in by_types.values():
-            rs, sc = build_read_plan(schema, field_ids, file_ids, ft)
-            out.append((rs, sc, fpaths))
-        return out
+        return None
+    return rs, tuple(sc)
 
 
 def build_read_plan(

@@ -3,7 +3,8 @@
 Layout (``warehouse/db/table/``)::
 
     metadata/v<N>.json        table metadata (schema, spec, snapshot log)
-    metadata/manifest-<snapshot_id>.json   full file list of that snapshot
+    metadata/manifest-<snapshot_id>-<uuid>.json   full file list of that
+                              snapshot (written once, never rewritten)
     metadata/version-hint.txt current N (advisory; vN claim is the commit)
     data/<commit-uuid>/...    parquet data files
 
@@ -20,6 +21,7 @@ swapping to a columnar manifest format touches only this module.
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import time
@@ -30,6 +32,10 @@ from typing import Any, Iterable
 from swiftlake_spark import fileio as _io
 from swiftlake_spark.tables.expressions import FileStatsView
 
+# parsed manifests kept process-wide (≙ the reference's 256 MiB manifest
+# ContentCache, bounded here by count rather than bytes)
+MANIFEST_CACHE_CAP = 32
+
 
 class CommitConflict(Exception):
     """Another writer committed an incompatible change."""
@@ -39,7 +45,7 @@ class ValidationError(Exception):
     """Engine-level validation failure (reference ValidationException)."""
 
 
-@dataclass
+@dataclass(frozen=True)
 class ManifestEntry:
     path: str  # relative to table root
     records: int
@@ -181,11 +187,13 @@ class TableMetadata:
         return s
 
     def read_manifest(self, snapshot: Snapshot | None) -> list[ManifestEntry]:
+        """The snapshot's entries, parsed once per process: manifest names
+        carry a uuid and are never rewritten, so the name is the cache
+        key.  Each caller gets its own list of the shared (frozen)
+        entries."""
         if snapshot is None:
             return []
-        io = _io.fileio_for(self.location)
-        data = io.read_text(_io.join(self.location, snapshot.manifest))
-        return [ManifestEntry.from_json(d) for d in json.loads(data)]
+        return list(_parse_manifest(self.location, snapshot.manifest))
 
     def to_json(self) -> dict:
         return {
@@ -354,6 +362,13 @@ def write_new_version(meta: TableMetadata) -> TableMetadata:
     io.replace_text(_io.join(mdir, "version-hint.txt"), str(next_v))
     meta.version = next_v
     return meta
+
+
+@functools.lru_cache(maxsize=MANIFEST_CACHE_CAP)
+def _parse_manifest(location: str, manifest: str) -> tuple[ManifestEntry, ...]:
+    io = _io.fileio_for(location)
+    data = io.read_text(_io.join(location, manifest))
+    return tuple(ManifestEntry.from_json(d) for d in json.loads(data))
 
 
 def write_manifest(location: str, snapshot_id: int, entries: Iterable[ManifestEntry]) -> str:

@@ -9,6 +9,8 @@ All rebuilds are Catalyst expressions (evolution.build_read_plan) — the
 plan tests assert no Python eval nodes appear.
 """
 
+import dataclasses
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import types as T
@@ -23,12 +25,26 @@ def rows(df, *cols):
 
 def _rewrite_manifest(t, snap, entries):
     """Overwrite a snapshot's manifest in place (test-only: simulates
-    files written by engine versions that stamped fewer column IDs)."""
+    files written by engine versions that stamped fewer column IDs).
+    The engine never rewrites a manifest, so its process-wide cache of
+    parsed manifests is dropped here, as a new process would start."""
     import json
     import os
 
+    from swiftlake_spark.tables import metadata as M
+
     with open(os.path.join(t.location, snap.manifest), "w") as f:
         json.dump([e.to_json() for e in entries], f, default=str)
+    M._parse_manifest.cache_clear()
+
+
+def _restamp(entries, keep):
+    """Entries with their column IDs narrowed to those ``keep`` accepts."""
+    return [
+        dataclasses.replace(
+            e, column_ids={k: v for k, v in e.column_ids.items() if keep(k)})
+        for e in entries
+    ]
 
 
 @pytest.fixture()
@@ -209,9 +225,7 @@ def test_nested_rename_refused_over_pre_nested_tracking_files(nested_table):
     # simulate a file written before nested-ID tracking: strip the
     # nested stamps from every manifest entry (top-level kept)
     snap = t.meta.current_snapshot()
-    entries = t.meta.read_manifest(snap)
-    for e in entries:
-        e.column_ids = {k: v for k, v in e.column_ids.items() if "." not in k}
+    entries = _restamp(t.meta.read_manifest(snap), lambda k: "." not in k)
     _rewrite_manifest(t, snap, entries)
     with pytest.raises(ValidationError, match="nested field-ID tracking"):
         t.refresh().rename_column("payload.amt", "amount")
@@ -222,9 +236,7 @@ def test_rename_refused_when_time_travel_reaches_legacy_files(nested_table, spar
     # gen-1 files get their column_ids stripped entirely (pre-field-ID
     # legacy) in the FIRST snapshot's manifest; then new data arrives
     first = t.meta.snapshots[0]
-    entries = t.meta.read_manifest(first)
-    for e in entries:
-        e.column_ids = {}
+    entries = _restamp(t.meta.read_manifest(first), lambda k: False)
     _rewrite_manifest(t, first, entries)
     t2 = t.refresh()
     # current snapshot still stamped — but snapshot 1 is reachable by
@@ -239,9 +251,7 @@ def test_nested_add_resurrection_guard(nested_table, spark):
     # payload.amt: a drop + re-add of that name must be refused (the
     # name-based legacy read would resurrect retired data)
     snap = t.meta.current_snapshot()
-    entries = t.meta.read_manifest(snap)
-    for e in entries:
-        e.column_ids = {k: v for k, v in e.column_ids.items() if "." not in k}
+    entries = _restamp(t.meta.read_manifest(snap), lambda k: "." not in k)
     _rewrite_manifest(t, snap, entries)
     t2 = t.refresh()
     t2.drop_column("payload.amt")
@@ -370,9 +380,7 @@ def test_resurrection_guard_field_literally_named_element(catalog, spark):
         )
     )
     snap = t.meta.current_snapshot()
-    entries = t.meta.read_manifest(snap)
-    for e in entries:
-        e.column_ids = {k: v for k, v in e.column_ids.items() if "." not in k}
+    entries = _restamp(t.meta.read_manifest(snap), lambda k: "." not in k)
     _rewrite_manifest(t, snap, entries)
     t2 = t.refresh()
     # struct field named "element": physical path is plain "s.element"
